@@ -94,27 +94,39 @@ def global_rn0(df: DataFrame, out: str = "_pts_rn0",
     per symbol, so offset + within-bucket rank IS the global rank).
     Exactness needs (symbol, ts) to uniquely order rows — the same
     assumption the single-window form and every per-symbol window in
-    this engine make. Worst case (a symbol entirely inside one bucket)
-    degrades to the old bucket-serial sort, never to a wrong rank, and
-    the offset window always runs on the narrow 3-column count relation.
+    this engine make. NULL keys keep their rows: the offsets join keys
+    on non-NULL surrogates of (symbol, bucket) — a NULL symbol becomes
+    ("", true) beside a real symbol's (symbol, false) — and a NULL ts
+    takes the lowest bucket, so it ranks first as NULLs sort in the
+    single window. (A null-safe join condition would key the join on
+    coalesce/isnull expressions that the rank window's partitioning
+    does not satisfy: one more exchange of the wide frame.) Worst case
+    (a symbol entirely inside one bucket) degrades to the old
+    bucket-serial sort, never to a wrong rank, and the offset window
+    always runs on the narrow count relation.
     Output column order: df's columns, then ``out``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     b_us = RANK_BUCKET_US if bucket_us is None else bucket_us
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    b = df.withColumn("_pts_bkt", F.floor(us / F.lit(b_us)).cast("long"))
-    wb = Window.partitionBy("symbol", "_pts_bkt").orderBy("ts")
+    b = df.withColumn("_pts_bkt", F.coalesce(
+        F.floor(us / F.lit(b_us)).cast("long"), F.lit(-(2 ** 63))))
+    surrogate = {"_pts_sk": F.coalesce(F.col("symbol"), F.lit("")),
+                 "_pts_sn": F.col("symbol").isNull()}
+    key = [*surrogate, "_pts_bkt"]
+    wb = Window.partitionBy(*key).orderBy("ts")
     counts = b.groupBy("symbol", "_pts_bkt").count()
     woff = (Window.partitionBy("symbol").orderBy("_pts_bkt")
             .rowsBetween(Window.unboundedPreceding, -1))
     offs = counts.withColumn(
         "_pts_off",
         F.coalesce(F.sum("count").over(woff), F.lit(0)).cast("long"),
-    ).select("symbol", "_pts_bkt", "_pts_off")
+    ).withColumns(surrogate).select(*key, "_pts_off")
     ranked = (
-        b.withColumn("_pts_brn", F.row_number().over(wb))
-        .join(offs, ["symbol", "_pts_bkt"])
+        b.withColumns(surrogate)
+        .withColumn("_pts_brn", F.row_number().over(wb))
+        .join(offs, key)
         .withColumn(out, F.col("_pts_off") + F.col("_pts_brn") - F.lit(1))
     )
     # restore df's column order (the join fronts its keys); backticks:
@@ -180,9 +192,9 @@ def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
     import pandas as pd
 
     fns = [s.fn for s in specs]
-    # _pts_rn0 (global 0-based row position, present only under the
-    # epoch-chunked path) rides along so shift-sensitive kernels (the
-    # OLS family) can regress against the same global x as whole groups.
+    # _pts_rn0 (global 0-based row position, when the frame carries one)
+    # rides along so shift-sensitive kernels (the OLS family) can
+    # regress against the same global x as whole groups.
     need = ["ts", "_pts_rn0"]
     for s in specs:
         for c in s.inputs:
@@ -251,16 +263,18 @@ def _run_chunked(
     `lead` rows of epoch e+1 are symmetrically carried BACK into epoch e.
     Declarative all the way: one bucket-parallel rank (global_rn0 — a
     single-window rank would serialize a hot symbol's entire history
-    into one sort task, the exact straggler this path exists to avoid)
-    + filtered unions (carry/chunk overhead ratio) + one
-    groupBy(symbol, epoch) pass. The rank's (symbol, bucket)
+    into one sort task, the exact straggler this path exists to avoid;
+    a frame that already carries ``_pts_rn0`` is not ranked again and
+    keeps the column) + filtered unions (carry/chunk overhead ratio) +
+    one groupBy(symbol, epoch) pass. The rank's (symbol, bucket)
     partitioning no longer satisfies the groupBy's clustering, so the
     pass pays its own (symbol, epoch) exchange — which is what actually
     PARALLELIZES a hot symbol's epochs (under the old shared symbol
     exchange all of a hot symbol's epochs landed in one task)."""
     from pyspark.sql import functions as F
 
-    tagged = global_rn0(df)
+    has_rank = "_pts_rn0" in df.columns
+    tagged = df if has_rank else global_rn0(df)
     base = tagged.withColumn(
         "_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long")
     ).withColumn("_pts_carry", F.lit(False))
@@ -285,6 +299,5 @@ def _run_chunked(
     runner = _make_runner(specs)
 
     out = u.groupBy("symbol", "_pts_epoch").applyInPandas(runner, out_schema)
-    return out.filter(~F.col("_pts_carry")).drop(
-        "_pts_rn0", "_pts_epoch", "_pts_carry"
-    )
+    out = out.filter(~F.col("_pts_carry")).drop("_pts_epoch", "_pts_carry")
+    return out if has_rank else out.drop("_pts_rn0")

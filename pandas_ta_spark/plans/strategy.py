@@ -140,9 +140,10 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
     rows than the threshold (one memoized count-by-symbol job), the
     chunk-safe indicators run through ``apply_strategy_chunked_rows``
     — bit-identical outputs, hot partition split into parallel
-    (symbol, chunk) tasks — and the rest (EWM/cumulative: genuinely
-    sequential per symbol) append on top via the plain path. Removes
-    the measured 14x hot-symbol trap without the caller asking."""
+    (symbol, chunk) tasks — on top of the rest (EWM/cumulative:
+    genuinely sequential per symbol), which runs first via the plain
+    path. Removes the measured 14x hot-symbol trap without the caller
+    asking."""
     if (auto_chunk_rows and not keep_temps and len(inds) > 0
             and not df.isStreaming):
         # size gate FIRST: split_chunkable regex-introspects every
@@ -167,50 +168,42 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
             lb, safe, unsafe = split_chunkable(inds)
             if safe:
                 chunk_rows = _auto_chunk_size(df, hot, lb)
-                out = apply_strategy_chunked_rows(df, safe, lb, chunk_rows)
-                if unsafe:
-                    # the non-chunkable half runs on the NARROW original
-                    # frame and joins back on the (symbol, ts) key —
-                    # stacking it on the chunked output instead re-ran
-                    # the chunked subtree inside its exchange and
-                    # shuffled every chunked column through the kernel
-                    # pass (measured 30.7s vs 24s plain on the skew
-                    # bench; the join shape runs the two independent
-                    # stage trees concurrently). Exactness assumes
-                    # (symbol, ts) uniquely keys rows AND is non-NULL —
-                    # the same assumption every per-symbol window here
-                    # makes (an inner join on a NULL key would silently
-                    # drop the row the plain path keeps).
-                    unsafe_outs = {c for i in unsafe for c in i.outputs}
-                    drop_cols = [c for c in df.columns
-                                 if c not in (SYMBOL, TS)
-                                 and c not in unsafe_outs]
-                    add = apply_strategy(df, unsafe, auto_chunk_rows=None)
-                    out = out.join(add.drop(*drop_cols), [SYMBOL, TS])
-                    # restore plain-path column order (ADVICE r13: the
-                    # join shape appended unsafe outputs last regardless
-                    # of indicator order). The plain path appends
-                    # expression finals in indicator order and THEN the
-                    # kernel outputs (run_kernels goes last), so mirror
-                    # that two-pass order, not flat indicator order.
-                    want = list(df.columns)
-                    for i in inds:
-                        want += [c for c in i.final if c not in want]
-                    for i in inds:
-                        if i.kernel is not None:
-                            want += [c for c in i.kernel.outputs
-                                     if c not in want]
-                    ordered, seen_c = [], set()
-                    for c in want + out.columns:
-                        if c in out.columns and c not in seen_c:
-                            seen_c.add(c)
-                            ordered.append(c)
-                    # backtick-quote: bare-string select parses dotted
-                    # output names (CCI_14_0.015, BBL_5_2.0) as struct
-                    # field access
-                    out = out.select(
-                        *[F.col(f"`{c}`") for c in ordered])
-                return out
+                if not unsafe:
+                    return apply_strategy_chunked_rows(df, safe, lb,
+                                                       chunk_rows)
+                # one stacked plan: the sequential half runs first on
+                # the plain path with the chunk rank beside it. The rank
+                # shares the (symbol, ts) window sort that half pays
+                # anyway (no extra serial sort of a hot symbol, no
+                # exchange on a symbol-partitioned input) and the
+                # chunked half reuses it: one exchange (salted symbol),
+                # no join, so NULL-key rows survive as on the plain path.
+                w = Window.partitionBy(SYMBOL).orderBy(TS)
+                ranked = df.withColumn(
+                    "_pts_rn0", F.row_number().over(w) - F.lit(1))
+                seq = apply_strategy(ranked, unsafe, auto_chunk_rows=None,
+                                     kernel_chunk_rows=kernel_chunk_rows)
+                out = apply_strategy_chunked_rows(seq, safe, lb,
+                                                  chunk_rows)
+                # restore plain-path column order: the plain path
+                # appends expression finals in indicator order and THEN
+                # the kernel outputs (run_kernels goes last)
+                want = list(df.columns)
+                for i in inds:
+                    want += [c for c in i.final if c not in want]
+                for i in inds:
+                    if i.kernel is not None:
+                        want += [c for c in i.kernel.outputs
+                                 if c not in want]
+                ordered, seen_c = [], set()
+                for c in want + out.columns:
+                    if c in out.columns and c not in seen_c:
+                        seen_c.add(c)
+                        ordered.append(c)
+                # backtick-quote: bare-string select parses dotted
+                # output names (CCI_14_0.015, BBL_5_2.0) as struct
+                # field access
+                return out.select(*[F.col(f"`{c}`") for c in ordered])
     temps: list[str] = []
     seen: dict[str, str] = {}  # temp name -> expression repr
     max_stages = max((len(i.stages) for i in inds), default=0)
@@ -558,14 +551,10 @@ def apply_strategy_chunked_rows(
     and the trailing-``lookback`` carry always fills its successor's
     frames — bit-identical to the unchunked plan, count-free.
 
-    Plan shape: one bucket-parallel rank (plans/kernels.global_rn0 —
-    r15: the previous single-window row_number buffered the WHOLE hot
-    symbol in one sort task, a ~7s straggler that made this path 2x
-    the time-chunked one on the 1.6M-row skew bench), a broadcast
-    anti-filter is unnecessary (carries to a chunk beyond the symbol's
-    last row can't exist: the filter keeps only tails whose successor
-    chunk index exists among the base rows), then the shared
-    salt/apply/unsalt tail. Determinism note: like every per-symbol
+    The chunk rank is ``_pts_rn0`` when ``df`` already carries it (the
+    auto route computes it on its plain-path half), otherwise the
+    bucket-parallel ``plans/kernels.global_rn0``; either way it is
+    dropped from the output. Determinism note: like every per-symbol
     window in this engine, exactness assumes (symbol, ts) uniquely
     orders rows."""
     if chunk_rows < max(lookback, 1):
@@ -590,7 +579,7 @@ def apply_strategy_chunked_rows(
     # (symbol, chunk) group reseeds x at 1 and the fit differs from the
     # plain path at the last ulp (caught by
     # tests/test_r15_rank_and_router.py)
-    base = global_rn0(df, out="_pts_rn0")
+    base = df if "_pts_rn0" in df.columns else global_rn0(df)
     chk = F.floor(F.col("_pts_rn0") / F.lit(chunk_rows)).cast("long")
     pos = F.col("_pts_rn0") % F.lit(chunk_rows)
     pairs = F.array(

@@ -2372,16 +2372,24 @@ def test_auto_router_skips_streaming_and_statless_frames(spark, tmp_path,
 def test_auto_chunk_routing_skewed_parity(spark, monkeypatch):
     """The r13 skew auto-router: a plain apply_strategy call on a frame
     whose hottest symbol exceeds the threshold must (a) actually take
-    the row-chunked path and (b) return bit-identical results — with
-    the non-chunkable EWM/cumulative indicators appended on top."""
+    the row-chunked path, as ONE stacked plan (no join, no second
+    rank), and (b) return bit-identical rows — with the non-chunkable
+    EWM/cumulative indicators computed underneath, and rows whose
+    symbol or ts is NULL kept as the plain path keeps them."""
     import pandas as pd
 
     from pandas_ta_spark.operators import momentum, overlap, statistics
+    from pandas_ta_spark.plans import kernels as K
     from pandas_ta_spark.plans import strategy as S
     from tests.conftest import make_pdf
 
-    pdf = pd.concat([make_pdf(2500, 7, "HOT"), make_pdf(300, 11, "B")],
-                    ignore_index=True)
+    # one NULL-ts row per symbol and one NULL-symbol row: one per group,
+    # so every per-symbol order stays deterministic
+    nulls = make_pdf(3, 5, "HOT")
+    nulls["symbol"] = ["HOT", "B", None]
+    nulls["ts"] = [pd.NaT, pd.NaT, pd.Timestamp("2024-01-02")]
+    pdf = pd.concat([make_pdf(2500, 7, "HOT"), make_pdf(300, 11, "B"),
+                     nulls], ignore_index=True)
     df = spark.createDataFrame(pdf).repartition(4)
     inds = [overlap.sma(20), statistics.stdev(30), momentum.mom(10),
             overlap.ema(10), momentum.rsi(14), overlap.vwap()]
@@ -2396,21 +2404,32 @@ def test_auto_chunk_routing_skewed_parity(spark, monkeypatch):
         routed["n"] += 1
         return real(*a, **k)
 
+    ranks = {"n": 0}
+    real_rn0 = K.global_rn0
+
+    def rn0_spy(*a, **k):
+        ranks["n"] += 1
+        return real_rn0(*a, **k)
+
     monkeypatch.setattr(S, "apply_strategy_chunked_rows", spy)
+    monkeypatch.setattr(K, "global_rn0", rn0_spy)
     monkeypatch.setattr(S, "_AUTO_CHUNK_MIN_BYTES", 0)
-    auto = (S.apply_strategy(df, inds, auto_chunk_rows=1000).toPandas()
+    routed_df = S.apply_strategy(df, inds, auto_chunk_rows=1000)
+    auto = (routed_df.toPandas()
             .sort_values(["symbol", "ts"]).reset_index(drop=True))
     assert routed["n"] == 1  # the router fired, no opt-in
-    # exact order, not set-equality: the routed join re-selects columns
-    # into plain-path order (ADVICE r13)
+    # the sequential half's rank feeds the chunked half: no second rank,
+    # no (symbol, ts) join-back
+    assert ranks["n"] == 0
+    plan = routed_df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    # exact order, not set-equality: the route re-selects columns into
+    # plain-path order (ADVICE r13)
     assert list(plain.columns) == list(auto.columns)
-    assert len(plain) == len(auto)
+    assert len(plain) == len(auto) == len(pdf)
     for c in plain.columns:
         a, b = plain[c], auto[c]
-        if a.dtype == object or c in ("symbol", "ts"):
-            assert (a == b).all(), c
-        else:
-            assert ((a == b) | (a.isna() & b.isna())).all(), c
+        assert ((a == b) | (a.isna() & b.isna())).all(), c
 
     # below the threshold the router must NOT fire (fresh frame object:
     # the hot-rows memo is per DataFrame identity)

@@ -406,26 +406,60 @@ def test_chunked_kernels_skewed_hot_symbol(spark):
         assert same.all(), f"{c}: {int((~same).sum())} rows differ"
 
 
-def test_chunked_kernel_forward_carry(bars):
+def test_chunked_kernel_forward_carry(bars, monkeypatch):
     """lead_rows chunking: ichimoku's chikou column reads kijun-1 FUTURE
     rows, so epoch e must receive the leading rows of epoch e+1
     (plans/kernels.py _run_chunked backward spill). chunk=80 > carry=77
-    and > lead=25 forces the chunked path; equality must be exact."""
-    from pandas_ta_spark.operators.overlap import ichimoku
-    from pandas_ta_spark.plans.kernels import run_kernels
+    and > lead=25 forces the chunked path; equality must be exact —
+    also when the frame already carries the rank (_pts_rn0), as the
+    skew router's sequential half does: the pass chunks on it instead
+    of ranking again, and keeps it."""
+    from pandas_ta_spark.operators.overlap import ichimoku, sma
+    from pandas_ta_spark.plans import kernels as K
+    from pandas_ta_spark.plans import strategy as S
+    from pandas_ta_spark.plans.kernels import global_rn0, run_kernels
 
     spec = ichimoku().kernel
     assert spec.carry_rows is not None and spec.lead_rows > 0
     cols = sorted(spec.outputs)
     whole = run_kernels(bars, [spec], chunk_rows=10**9)
     chunked = run_kernels(bars, [spec], chunk_rows=80)
+    ranked = global_rn0(bars)
+    reused = run_kernels(ranked, [spec], chunk_rows=80)
+    assert reused.columns == ranked.columns + list(spec.outputs)
     a = whole.orderBy("symbol", "ts").toPandas()[cols]
     b = chunked.orderBy("symbol", "ts").toPandas()[cols]
-    assert len(a) == len(b) == 550
+    r = reused.orderBy("symbol", "ts").toPandas()[cols]
+    assert len(a) == len(b) == len(r) == 550
     for c in cols:
-        x, y = a[c].to_numpy(float), b[c].to_numpy(float)
+        x, y, z = (f[c].to_numpy(float) for f in (a, b, r))
+        for got in (y, z):
+            same = (np.isnan(x) & np.isnan(got)) | (x == got)
+            assert same.all(), f"{c}: {int((~same).sum())} rows differ"
+
+    # through the skew router: a hot symbol past CHUNK_ROWS whose
+    # sequential half holds only finite-carry kernels (ichimoku: unsafe
+    # for row chunks by its lead) epoch-chunks that half on the route's
+    # own rank
+    inds = [ichimoku(), sma(10)]
+    frame = bars.select("*")  # fresh object: the route memo is per frame
+    plain = S.apply_strategy(frame, inds, auto_chunk_rows=None)
+    epochs = []
+    real = K._run_chunked
+    monkeypatch.setattr(K, "_run_chunked",
+                        lambda df, *a: epochs.append(1) or real(df, *a))
+    monkeypatch.setattr(K, "CHUNK_ROWS", 80)
+    monkeypatch.setattr(S, "_AUTO_CHUNK_MIN_BYTES", 0)
+    routed = S.apply_strategy(frame, inds, auto_chunk_rows=100)
+    assert epochs  # the sequential half took the epoch-chunked pass
+    assert routed.columns == plain.columns
+    p = plain.orderBy("symbol", "ts").toPandas()
+    q = routed.orderBy("symbol", "ts").toPandas()
+    assert len(p) == len(q) == 550
+    for c in cols + ["SMA_10"]:
+        x, y = p[c].to_numpy(float), q[c].to_numpy(float)
         same = (np.isnan(x) & np.isnan(y)) | (x == y)
-        assert same.all(), f"{c}: {int((~same).sum())} rows differ"
+        assert same.all(), f"routed {c}: {int((~same).sum())} rows differ"
 
 
 def test_signals_quantize_opt_out(spark):

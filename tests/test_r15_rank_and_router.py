@@ -40,7 +40,15 @@ def test_global_rn0_matches_single_window(spark, bucket_us):
 
     from pandas_ta_spark.plans.kernels import global_rn0
 
+    # NULL keys keep their rows and rank as the single window ranks
+    # them: one NULL-ts row per symbol (NULLs sort first) and one
+    # NULL-symbol row — one per group, so every rank stays deterministic
     df = _frame(spark)
+    df = df.unionByName(spark.createDataFrame(
+        [(s, None) for s in ("A", "B", "C")]
+        + [(None, pd.Timestamp("2023-03-02").to_pydatetime())],
+        "symbol string, ts timestamp",
+    ), allowMissingColumns=True)
     got = (global_rn0(df, out="_rn", bucket_us=bucket_us)
            .select("symbol", "ts", "_rn")
            .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
@@ -48,6 +56,7 @@ def test_global_rn0_matches_single_window(spark, bucket_us):
     want = (df.withColumn("_rn", F.row_number().over(w) - F.lit(1))
             .select("symbol", "ts", "_rn")
             .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert len(got) == len(want) == df.count()
     assert got["_rn"].tolist() == want["_rn"].tolist()
     # column-order contract: df's columns first, then the rank
     full = global_rn0(df, out="_rn", bucket_us=bucket_us)

@@ -104,7 +104,7 @@ def main():
         # the opt-in time-chunked path (bench's 1.78x row)
         "time_5d": lambda: apply_strategy_chunked(
             skew_df, bounded, lookback=skew_lb, chunk="5 days"),
-        # full 24ind auto (unsafe EWM tail join included)
+        # full 24ind auto (the EWM half stacked under the chunked half)
         "auto_24": lambda: apply_strategy(skew_df, strat24),
     }
     for b in variants.values():
