@@ -547,7 +547,7 @@ def main():
     #    plain -> ~1.3-2x chunked). Correctness of chunked-under-skew
     #    is pinned by test_chunked_kernels_skewed_hot_symbol.
     from pandas_ta_spark.plans.strategy import (
-        apply_strategy_chunked, expression_lookback)
+        apply_strategy_chunked, split_chunkable)
 
     rep = F.explode(F.sequence(F.lit(0), F.lit(19))).alias("rep")
     skew_df = (
@@ -564,21 +564,9 @@ def main():
             "open", "high", "low", "close", "volume",
         )
     )
-    # chunk-safe subset of strat24 (the same two predicates
-    # apply_strategy_chunked enforces), lookback = its deepest window
-    skew_lb = 0
-    bounded = []
-    for ind in strat24:
-        if ind.kernel is not None and (
-                ind.kernel.carry_rows is None
-                or getattr(ind.kernel, "lead_rows", 0)):
-            continue
-        depth = expression_lookback(ind)
-        if depth is None:
-            continue
-        skew_lb = max(skew_lb, depth,
-                      ind.kernel.carry_rows if ind.kernel else 0)
-        bounded.append(ind)
+    # chunk-safe subset of strat24 (the rule apply_strategy_chunked
+    # enforces), lookback = its deepest window
+    skew_lb, bounded, _ = split_chunkable(strat24)
 
     skew_df.cache().count()
     try:

@@ -117,7 +117,7 @@ def _swv_apply(v: np.ndarray, window: int, fn) -> np.ndarray:
 # mean/sum recompute per frame (swv) rather than pandas' online rolling
 # accumulator: the online path's last-ulp output depends on where the
 # series STARTS, which would break exact chunk-and-carry equality
-# (plans/kernels.py _run_chunked) and run-to-run determinism under
+# (plans/kernels.py assign_chunks) and run-to-run determinism under
 # repartitioning. Per-frame recompute is start-point independent.
 def roll_mean_pd(x: pd.Series, n: int) -> pd.Series:
     v = x.to_numpy(dtype="float64")

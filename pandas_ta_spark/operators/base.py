@@ -251,7 +251,7 @@ class KernelSpec:
     # forward dependency bound: output at row t also reads rows
     # (t, t + lead_rows] (non-causal columns, e.g. ichimoku's chikou
     # lead). Chunked execution carries this many LEADING rows of epoch
-    # e+1 back into epoch e (plans/kernels.py _run_chunked).
+    # e+1 back into epoch e (plans/kernels.py assign_chunks).
     lead_rows: int = 0
     # the kernel's FP rounding depends on each row's global position in
     # its symbol's ts order (the OLS family regresses against

@@ -13,8 +13,9 @@ Scale notes (100 TB):
   a strategy with 30 EWM indicators costs the same exchange as one;
 - constraint: a whole (symbol) group must fit in one executor's memory
   (SURVEY.md §4.3.4). Time-series are naturally bounded per symbol
-  (~1e7 rows); for longer series, chunk by (symbol, epoch) and carry seed
-  rows across epochs — see streaming/ for the stateful variant;
+  (~1e7 rows); finite-carry kernels chunk longer series by
+  (symbol, epoch) with carried seed rows (assign_chunks) — see
+  streaming/ for the stateful variant;
 - pandas ewm/cum kernels are O(n) sequential per group but vectorized in C,
   measured at 1e8 rows/s (BASELINE.md) — the per-group sort dominates.
 """
@@ -30,18 +31,17 @@ from pandas_ta_spark.operators.base import KernelSpec
 
 # per-(symbol) group memory bound (SURVEY §4.3.4): a whole group must fit
 # one executor. 20M rows x ~8 cols x 8B ~= 1.3 GB — beyond that, chunk by
-# (symbol, epoch) and carry seed state (see streaming/indicators.py for
-# the state-carry pattern).
+# (symbol, epoch) and carry seed state (assign_chunks; see
+# streaming/indicators.py for the state-carry pattern).
 MAX_GROUP_ROWS = int(os.environ.get("PTS_MAX_KERNEL_GROUP_ROWS", 20_000_000))
 
 
 # Epoch-chunked execution: when every kernel in the pass declares a finite
 # carry (FIR/rolling kernels), a symbol group larger than this splits into
-# (symbol, epoch) chunks of CHUNK_ROWS rows; the trailing max(carry) rows
-# of each epoch are duplicated into the next as warm-up context and their
-# outputs dropped — results are EXACTLY the unchunked ones, memory is
+# (symbol, epoch) chunks of CHUNK_ROWS rows with carried warm-up rows
+# (assign_chunks) — results are EXACTLY the unchunked ones, memory is
 # bounded per task, and one hot symbol parallelizes across executors.
-CHUNK_ROWS = int(os.environ.get("PTS_KERNEL_CHUNK_ROWS", 5_000_000))
+CHUNK_ROWS = 5_000_000
 
 
 def _maybe_exceeds_rows(df: DataFrame, rows: int) -> bool:
@@ -73,9 +73,8 @@ def _maybe_exceeds_rows(df: DataFrame, rows: int) -> bool:
 # Bucket width for the two-level rank (global_rn0): per-symbol ranks are
 # computed bucket-parallel; a bucket only bounds the per-task sort, never
 # correctness. One day of microseconds suits bar/tick data (1e3-1e5 rows
-# per symbol-day); override for exotic densities.
-RANK_BUCKET_US = int(os.environ.get("PTS_RANK_BUCKET_US",
-                                    86_400_000_000))
+# per symbol-day); global_rn0's bucket_us overrides for exotic densities.
+RANK_BUCKET_US = 86_400_000_000
 
 
 def global_rn0(df: DataFrame, out: str = "_pts_rn0",
@@ -250,54 +249,71 @@ def _is_sorted(a) -> bool:
     return len(a) < 2 or bool(np.all(a[:-1] <= a[1:]))
 
 
+def assign_chunks(df: DataFrame, rows: int, carry: int,
+                  lead: int = 0) -> DataFrame:
+    """Exact chunk-and-carry assignment (SURVEY §4.3.4), shared by the
+    kernel epoch pass and the row-chunked strategy path.
+
+    Chunk k of a symbol is rows [k*rows, (k+1)*rows) of its ts order,
+    ranked by ``_pts_rn0`` (``global_rn0`` unless ``df`` already carries
+    the column). Each row explodes into its own entry
+    (``_pts_chk`` = k, ``_pts_carry`` = false) plus a carry entry for
+    chunk k+1 when it is among chunk k's last ``carry`` rows and, with
+    ``lead > 0``, one for chunk k-1 when it is among the first ``lead``
+    rows of a non-first chunk. Grouping by (symbol, ``_pts_chk``) then
+    gives every chunk full warm-up (and look-ahead) context; the caller
+    drops the ``_pts_carry`` entries after computing.
+
+    - Explode rather than union filtered copies: one subtree, so the
+      rank evaluates once per action (the union form re-ran the
+      per-symbol sort per branch: 9.3s -> 6.5s on a 1.6M-row hot
+      symbol).
+    - Carries past a symbol's last chunk land in phantom groups that
+      hold only carry rows (<= ``carry`` of them, all dropped) — cheaper
+      than a successor map that would suppress them.
+    - ``_pts_rn0`` stays aboard: position-dependent kernels (the OLS
+      family, ``KernelSpec.pos_dependent``) read it so their x positions
+      stay global instead of restarting per chunk."""
+    from pyspark.sql import functions as F
+
+    base = df if "_pts_rn0" in df.columns else global_rn0(df)
+    rn = F.col("_pts_rn0")
+    chk = F.floor(rn / F.lit(rows)).cast("long")
+    pos = rn % F.lit(rows)
+
+    def entry(c, carried: bool):
+        return F.struct(c.alias("_pts_chk"),
+                        F.lit(carried).alias("_pts_carry"))
+
+    entries = [entry(chk, False),
+               F.when(pos >= F.lit(rows - carry), entry(chk + 1, True))]
+    if lead > 0:
+        entries.append(F.when((pos < F.lit(lead)) & (rn >= F.lit(rows)),
+                              entry(chk - 1, True)))
+    return (
+        base.select("*", F.explode(F.filter(
+            F.array(*entries), lambda e: e.isNotNull())).alias("_pts_e"))
+        .withColumns({c: F.col(f"_pts_e.{c}")
+                      for c in ("_pts_chk", "_pts_carry")})
+        .drop("_pts_e")
+    )
+
+
 def _run_chunked(
     df: DataFrame, specs: list[KernelSpec], chunk: int, carry: int,
     lead: int = 0,
 ) -> DataFrame:
-    """Exact chunk-and-carry for finite-carry kernels (SURVEY §4.3.4).
-
-    epoch(row) = rank div chunk; the last `carry` rows of epoch e are
-    UNIONed into epoch e+1 flagged _pts_carry, so each chunk computes with
-    full warm-up context; carried rows' outputs are dropped afterwards.
-    When a spec declares ``lead_rows`` (non-causal columns), the first
-    `lead` rows of epoch e+1 are symmetrically carried BACK into epoch e.
-    Declarative all the way: one bucket-parallel rank (global_rn0 — a
-    single-window rank would serialize a hot symbol's entire history
-    into one sort task, the exact straggler this path exists to avoid;
-    a frame that already carries ``_pts_rn0`` is not ranked again and
-    keeps the column) + filtered unions (carry/chunk overhead ratio) +
-    one groupBy(symbol, epoch) pass. The rank's (symbol, bucket)
-    partitioning no longer satisfies the groupBy's clustering, so the
-    pass pays its own (symbol, epoch) exchange — which is what actually
-    PARALLELIZES a hot symbol's epochs (under the old shared symbol
-    exchange all of a hot symbol's epochs landed in one task)."""
+    """Epoch-chunked kernel pass: ``assign_chunks`` -> one
+    groupBy(symbol, chunk) Arrow pass -> drop the carries. The rank's
+    (symbol, bucket) partitioning does not satisfy the groupBy, so the
+    pass pays its own (symbol, chunk) exchange — which is what spreads
+    a hot symbol's epochs over tasks. Output: df's columns (an incoming
+    ``_pts_rn0`` kept, a computed one dropped), then the outputs."""
     from pyspark.sql import functions as F
 
-    has_rank = "_pts_rn0" in df.columns
-    tagged = df if has_rank else global_rn0(df)
-    base = tagged.withColumn(
-        "_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long")
-    ).withColumn("_pts_carry", F.lit(False))
-    spill = (
-        tagged.filter((F.col("_pts_rn0") % chunk) >= chunk - carry)
-        .withColumn("_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long") + 1)
-        .withColumn("_pts_carry", F.lit(True))
-    )
-    u = base.unionByName(spill)
-    if lead > 0:
-        back = (
-            tagged.filter(
-                ((F.col("_pts_rn0") % chunk) < lead) & (F.col("_pts_rn0") >= chunk)
-            )
-            .withColumn(
-                "_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long") - 1
-            )
-            .withColumn("_pts_carry", F.lit(True))
-        )
-        u = u.unionByName(back)
-    out_schema = _out_schema(u, specs)
-    runner = _make_runner(specs)
-
-    out = u.groupBy("symbol", "_pts_epoch").applyInPandas(runner, out_schema)
-    out = out.filter(~F.col("_pts_carry")).drop("_pts_epoch", "_pts_carry")
-    return out if has_rank else out.drop("_pts_rn0")
+    u = assign_chunks(df, chunk, carry, lead)
+    out = u.groupBy("symbol", "_pts_chk").applyInPandas(
+        _make_runner(specs), _out_schema(u, specs))
+    temps = [c for c in ("_pts_rn0", "_pts_chk", "_pts_carry")
+             if c not in df.columns]
+    return out.filter(~F.col("_pts_carry")).drop(*temps)

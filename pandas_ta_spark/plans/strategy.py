@@ -27,7 +27,7 @@ import re
 
 from pandas_ta_spark.functions.windows import SYMBOL, TS
 from pandas_ta_spark.operators.base import Indicator
-from pandas_ta_spark.plans.kernels import run_kernels
+from pandas_ta_spark.plans.kernels import assign_chunks, run_kernels
 
 # Per-symbol row count above which apply_strategy auto-routes the
 # chunk-safe indicators through the row-chunked path (VERDICT r12 ask
@@ -101,26 +101,30 @@ def _auto_chunk_size(df: DataFrame, hot: int, lb: int) -> int:
     return max(4096, 32 * lb, min(target, 1_048_576))
 
 
-def split_chunkable(inds: list[Indicator]):
-    """Partition a strategy into (lookback, chunk-safe, not-chunk-safe).
+def chunk_depth(ind: Indicator) -> int | None:
+    """Rows of history ``ind`` reads, or None when chunking cannot be
+    exact: a kernel without finite ``carry_rows`` or with ``lead_rows``,
+    or expressions whose ``expression_lookback`` is unbounded. The one
+    chunk-safety rule behind ``split_chunkable`` and both chunked
+    strategy paths."""
+    k = ind.kernel
+    if k is not None and (k.carry_rows is None or k.lead_rows):
+        return None
+    depth = expression_lookback(ind)
+    if depth is None:
+        return None
+    return max(depth, k.carry_rows if k is not None else 0)
 
-    Chunk-safe = the exact predicates ``apply_strategy_chunked``
-    enforces: kernels with finite ``carry_rows`` and no ``lead_rows``;
-    expression indicators whose SQL-twin-introspected lookback is
-    bounded. ``lookback`` is the max depth over the safe set."""
+
+def split_chunkable(inds: list[Indicator]):
+    """Partition a strategy into (lookback, chunk-safe, not-chunk-safe)
+    by ``chunk_depth``; ``lookback`` is the max depth over the safe
+    set."""
     lb, safe, unsafe = 0, [], []
     for ind in inds:
-        if ind.kernel is not None and (
-                ind.kernel.carry_rows is None
-                or getattr(ind.kernel, "lead_rows", 0)):
-            unsafe.append(ind)
-            continue
-        depth = expression_lookback(ind)
-        if depth is None:
-            unsafe.append(ind)
-            continue
-        lb = max(lb, depth, ind.kernel.carry_rows if ind.kernel else 0)
-        safe.append(ind)
+        d = chunk_depth(ind)
+        (unsafe if d is None else safe).append(ind)
+        lb = max(lb, d or 0)
     return lb, safe, unsafe
 
 
@@ -402,8 +406,7 @@ def apply_strategy_chunked(
     shuffles as ``apply_strategy``, each partition now chunk-sized.
     """
     _reject_unchunkable(inds, lookback)
-    if any(i.kernel is not None and getattr(i.kernel, "pos_dependent", False)
-           for i in inds):
+    if any(i.kernel is not None and i.kernel.pos_dependent for i in inds):
         # position-dependent kernels (OLS family) need the global rank
         # to keep chunked x bit-identical to the whole-group x; only
         # pay the rank subtree when such a kernel is present
@@ -417,41 +420,42 @@ def apply_strategy_chunked(
     per = {"day": 86_400_000_000, "days": 86_400_000_000,
            "hour": 3_600_000_000, "hours": 3_600_000_000}[unit]
     chunk_us = int(qty) * per
-    base = df.withColumn("_chk", F.floor(us / F.lit(chunk_us)).cast("long"))
+    base = df.withColumn("_pts_chk",
+                         F.floor(us / F.lit(chunk_us)).cast("long"))
     # successor map: carries target the next chunk that actually has
     # rows, so a symbol dark for whole chunks still hands its history
     # across the gap (chunk c+1 empty -> c's tail lands in c+2). Tiny
     # relation (symbols x chunks), broadcast.
-    wnext = Window.partitionBy(SYMBOL).orderBy("_chk")
+    wnext = Window.partitionBy(SYMBOL).orderBy("_pts_chk")
     succ = (
-        base.select(SYMBOL, "_chk").distinct()
-        .withColumn("_next", F.lead("_chk").over(wnext))
+        base.select(SYMBOL, "_pts_chk").distinct()
+        .withColumn("_next", F.lead("_pts_chk").over(wnext))
         .filter(F.col("_next").isNotNull())
     )
     if validate:
         counts = (
-            base.groupBy(SYMBOL, "_chk").count()
-            .withColumn("_last", F.lead("_chk").over(wnext).isNull())
+            base.groupBy(SYMBOL, "_pts_chk").count()
+            .withColumn("_last", F.lead("_pts_chk").over(wnext).isNull())
             .filter(~F.col("_last") & (F.col("count") < lookback))
         )
         offenders = counts.limit(5).collect()
         if offenders:
+            bad = [(r[SYMBOL], r["_pts_chk"], r["count"]) for r in offenders]
             raise ValueError(
                 f"chunk(s) with < lookback={lookback} rows would truncate "
-                f"frames vs the unchunked plan: "
-                f"{[(r[SYMBOL], r['_chk'], r['count']) for r in offenders]}"
+                f"frames vs the unchunked plan: {bad}"
             )
-    wdesc = Window.partitionBy(SYMBOL, "_chk").orderBy(F.col(TS).desc())
+    wdesc = Window.partitionBy(SYMBOL, "_pts_chk").orderBy(F.col(TS).desc())
     carry = (
         base.withColumn("_rnd", F.row_number().over(wdesc))
         .filter(F.col("_rnd") <= lookback)
         .drop("_rnd")
-        .join(F.broadcast(succ), [SYMBOL, "_chk"])
-        .withColumn("_chk", F.col("_next"))
+        .join(F.broadcast(succ), [SYMBOL, "_pts_chk"])
+        .withColumn("_pts_chk", F.col("_next"))
         .drop("_next")
-        .withColumn("_carry", F.lit(1))
+        .withColumn("_pts_carry", F.lit(True))
     )
-    u = base.withColumn("_carry", F.lit(0)).unionByName(carry)
+    u = base.withColumn("_pts_carry", F.lit(False)).unionByName(carry)
     return _salt_apply_unsalt(u, inds)
 
 
@@ -460,7 +464,7 @@ def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
     run the normal one-plan strategy over the salted key (auto-routing
     off — the groups are chunk-bounded by construction), drop carries."""
     salted = u.withColumn("_sym", F.col(SYMBOL)).withColumn(
-        SYMBOL, F.concat_ws("#", SYMBOL, F.col("_chk").cast("string"))
+        SYMBOL, F.concat_ws("#", SYMBOL, F.col("_pts_chk").cast("string"))
     )
     # kernel_chunk_rows=0: the salted (symbol, chunk) groups are
     # chunk-bounded by construction, so the kernel pass must not stack
@@ -468,51 +472,38 @@ def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
     out = apply_strategy(salted, inds, auto_chunk_rows=None,
                          kernel_chunk_rows=0)
     out = (
-        out.filter(F.col("_carry") == 0)
+        out.filter(~F.col("_pts_carry"))
         .withColumn(SYMBOL, F.col("_sym"))
-        .drop("_sym", "_chk", "_carry")
+        .drop("_sym", "_pts_chk", "_pts_carry")
     )
     # the global rank (kept for position-dependent kernels) is plumbing,
     # not output
-    return out.drop("_pts_rn0") if "_pts_rn0" in out.columns else out
+    return out.drop("_pts_rn0")
 
 
 def _reject_unchunkable(inds: list[Indicator], lookback: int) -> None:
-    """The chunked-exactness contract, both halves (ADVICE r6).
-
-    Bounded-lookback kernels (finite ``carry_rows <= lookback``, no
-    forward-looking rows) chunk exactly like window expressions: the
-    carry replicas are precisely the history their declared carry
-    needs. Unbounded (EWM, carry_rows=None), deeper-than-lookback, or
-    lead-consuming kernels would silently reseed per chunk — reject.
-    Expression indicators are depth-checked via ``expression_lookback``
-    (SQL-twin introspection): a window deeper than the lookback —
-    sma(50) under lookback=30 — used to be ACCEPTED and silently
-    diverge; cumulative/position-dependent expressions (CUM,
-    row_number, lead) raise instead of silently diverging."""
-    bad = [
-        i for i in inds
-        if i.kernel is not None and (
-            i.kernel.carry_rows is None
-            or i.kernel.carry_rows > lookback
-            or getattr(i.kernel, "lead_rows", 0)
-        )
-    ]
-    if bad:
+    """Raise unless every indicator's ``chunk_depth`` is at most
+    ``lookback`` (ADVICE r6: an sma(50) under lookback=30, or a CUM /
+    row_number / lead expression, would otherwise silently diverge from
+    the unchunked plan). The message names the failing half of the
+    contract: kernel carry, unbounded expression, or too-deep
+    expression."""
+    bad = [i for i in inds
+           if (d := chunk_depth(i)) is None or d > lookback]
+    if not bad:
+        return
+    expr = [(i, expression_lookback(i)) for i in bad]
+    unbounded = [i for i, d in expr if d is None]
+    too_deep = [(i, d) for i, d in expr if d is not None and d > lookback]
+    # expressions within lookback: the kernel's carry/lead is the cause
+    kernels = [i for i, d in expr if d is not None and d <= lookback]
+    if kernels:
         raise ValueError(
             "apply_strategy_chunked requires bounded-lookback indicators "
             "(window exprs or kernels with carry_rows <= lookback and no "
             "lead_rows); EWM/unbounded kernels have their own chunking "
-            f"(plans/kernels.py): {[i.outputs for i in bad]}"
+            f"(plans/kernels.py): {[i.outputs for i in kernels]}"
         )
-    too_deep = []
-    unbounded = []
-    for i in inds:
-        d = expression_lookback(i)
-        if d is None:
-            unbounded.append(i)
-        elif d > lookback:
-            too_deep.append((i, d))
     if unbounded:
         raise ValueError(
             "apply_strategy_chunked cannot chunk position-dependent or "
@@ -522,15 +513,14 @@ def _reject_unchunkable(inds: list[Indicator], lookback: int) -> None:
             "diverge from the unchunked plan: "
             f"{[i.outputs for i in unbounded]}"
         )
-    if too_deep:
-        raise ValueError(
-            "expression indicator(s) read more history than "
-            f"lookback={lookback} — retained rows near chunk starts "
-            "would see truncated frames and silently diverge from the "
-            "unchunked plan: "
-            f"{[(i.outputs, d) for i, d in too_deep]}. "
-            "Raise lookback to at least the max depth."
-        )
+    raise ValueError(
+        "expression indicator(s) read more history than "
+        f"lookback={lookback} — retained rows near chunk starts "
+        "would see truncated frames and silently diverge from the "
+        "unchunked plan: "
+        f"{[(i.outputs, d) for i, d in too_deep]}. "
+        "Raise lookback to at least the max depth."
+    )
 
 
 def apply_strategy_chunked_rows(
@@ -540,59 +530,17 @@ def apply_strategy_chunked_rows(
     chunk_rows: int = 262_144,
 ) -> DataFrame:
     """``apply_strategy_chunked`` with ROW-count chunks instead of time
-    chunks — the auto-routing backend (see ``apply_strategy``).
-
-    Time chunks need a validation aggregation to promise every
-    non-empty chunk holds >= lookback rows (sparse symbols can land an
-    undersized chunk and truncate a frame). Row chunks make that
-    guarantee BY CONSTRUCTION: chunk k of a symbol is rows
-    [k*chunk_rows, (k+1)*chunk_rows) of its ts-ordered sequence, so
-    every non-last chunk has exactly ``chunk_rows >= lookback`` rows
-    and the trailing-``lookback`` carry always fills its successor's
-    frames — bit-identical to the unchunked plan, count-free.
-
-    The chunk rank is ``_pts_rn0`` when ``df`` already carries it (the
-    auto route computes it on its plain-path half), otherwise the
-    bucket-parallel ``plans/kernels.global_rn0``; either way it is
-    dropped from the output. Determinism note: like every per-symbol
-    window in this engine, exactness assumes (symbol, ts) uniquely
-    orders rows."""
+    chunks — the auto-routing backend (see ``apply_strategy``):
+    ``assign_chunks(df, chunk_rows, lookback)`` then the salted
+    strategy. Every non-last chunk holds exactly ``chunk_rows >=
+    lookback`` rows, so the carry always fills its successor's frames
+    — bit-identical to the unchunked plan with no validation count.
+    ``_pts_rn0`` is reused when ``df`` carries it and dropped from the
+    output either way. Like every per-symbol window in this engine,
+    exactness assumes (symbol, ts) uniquely orders rows."""
     if chunk_rows < max(lookback, 1):
         raise ValueError(
             f"chunk_rows={chunk_rows} < lookback={lookback}: non-last "
             "chunks could not carry enough history")
     _reject_unchunkable(inds, lookback)
-    # single-subtree chunk assignment: each row EXPLODES into its own
-    # chunk entry plus (when it sits in the trailing-lookback positions)
-    # a carry entry for chunk k+1 — no union, so the rank subtree
-    # evaluates ONCE per action (the union/succ-map shape re-ran the
-    # per-symbol sort 3x: measured 9.3s -> 6.5s on the 1.6M-row skew
-    # bench). Carries past a symbol's last chunk land in phantom
-    # (symbol, chunk) groups holding only carry rows — computed over
-    # <= lookback rows and fully dropped by the _carry filter, which is
-    # cheaper than the broadcast successor map that suppressed them.
-    from pandas_ta_spark.plans.kernels import global_rn0
-
-    # the rank stays aboard as _pts_rn0: position-dependent kernels (the
-    # OLS family, KernelSpec.pos_dependent) read it inside the salted
-    # pass so their x positions stay GLOBAL — without it each
-    # (symbol, chunk) group reseeds x at 1 and the fit differs from the
-    # plain path at the last ulp (caught by
-    # tests/test_r15_rank_and_router.py)
-    base = df if "_pts_rn0" in df.columns else global_rn0(df)
-    chk = F.floor(F.col("_pts_rn0") / F.lit(chunk_rows)).cast("long")
-    pos = F.col("_pts_rn0") % F.lit(chunk_rows)
-    pairs = F.array(
-        F.struct(chk.alias("_chk"), F.lit(0).alias("_carry")),
-        F.when(pos >= F.lit(chunk_rows - lookback),
-               F.struct((chk + F.lit(1)).alias("_chk"),
-                        F.lit(1).alias("_carry"))),
-    )
-    u = (
-        base.select("*", F.explode(
-            F.filter(pairs, lambda x: x.isNotNull())).alias("_pc"))
-        .withColumn("_chk", F.col("_pc._chk"))
-        .withColumn("_carry", F.col("_pc._carry"))
-        .drop("_pc")
-    )
-    return _salt_apply_unsalt(u, inds)
+    return _salt_apply_unsalt(assign_chunks(df, chunk_rows, lookback), inds)

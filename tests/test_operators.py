@@ -334,7 +334,7 @@ def test_drawdown(bars, pdf_bars):
 # ------------------------------------------------------ kernel chunking ----
 
 def test_chunked_kernels_match_unchunked(bars):
-    """Epoch-chunked execution (plans/kernels.py _run_chunked) must be
+    """Epoch-chunked execution (plans/kernels.py assign_chunks) must be
     EXACTLY the unchunked result: chunk=80 forces 4 chunks on the 300-row
     symbol A / 250-row symbol B fixture across every finite-carry kernel
     family (order stats, moments, min/max, argmax-distance, chained rolls)."""
@@ -409,11 +409,14 @@ def test_chunked_kernels_skewed_hot_symbol(spark):
 def test_chunked_kernel_forward_carry(bars, monkeypatch):
     """lead_rows chunking: ichimoku's chikou column reads kijun-1 FUTURE
     rows, so epoch e must receive the leading rows of epoch e+1
-    (plans/kernels.py _run_chunked backward spill). chunk=80 > carry=77
+    (plans/kernels.py assign_chunks backward carry). chunk=80 > carry=77
     and > lead=25 forces the chunked path; equality must be exact —
     also when the frame already carries the rank (_pts_rn0), as the
     skew router's sequential half does: the pass chunks on it instead
-    of ranking again, and keeps it."""
+    of ranking again, and keeps it. Either way the epoch pass is one
+    subtree: no Union, one rank window."""
+    import re
+
     from pandas_ta_spark.operators.overlap import ichimoku, sma
     from pandas_ta_spark.plans import kernels as K
     from pandas_ta_spark.plans import strategy as S
@@ -427,6 +430,11 @@ def test_chunked_kernel_forward_carry(bars, monkeypatch):
     ranked = global_rn0(bars)
     reused = run_kernels(ranked, [spec], chunk_rows=80)
     assert reused.columns == ranked.columns + list(spec.outputs)
+    for d in (chunked, reused):
+        plan = d._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"^[\s:+-]*Union\b", plan, re.M), plan
+        assert len(re.findall(r"^[\s:+-]*Window \[row_number\(\)",
+                              plan, re.M)) == 1, plan
     a = whole.orderBy("symbol", "ts").toPandas()[cols]
     b = chunked.orderBy("symbol", "ts").toPandas()[cols]
     r = reused.orderBy("symbol", "ts").toPandas()[cols]

@@ -41,7 +41,7 @@ def main():
     from bench import force, strategy_indicators, tick_bars
     from pandas_ta_spark.plans.strategy import (
         apply_strategy, apply_strategy_chunked, apply_strategy_chunked_rows,
-        expression_lookback, split_chunkable,
+        split_chunkable,
     )
 
     ticks = tick_bars(spark, sf_dir).repartition(61, "symbol")
@@ -61,21 +61,8 @@ def main():
             "open", "high", "low", "close", "volume",
         )
     )
-    skew_lb = 0
-    bounded = []
-    for ind in strat24:
-        if ind.kernel is not None and (
-                ind.kernel.carry_rows is None
-                or getattr(ind.kernel, "lead_rows", 0)):
-            continue
-        depth = expression_lookback(ind)
-        if depth is None:
-            continue
-        skew_lb = max(skew_lb, depth,
-                      ind.kernel.carry_rows if ind.kernel else 0)
-        bounded.append(ind)
     skew_df.cache().count()
-    lb, safe, unsafe = split_chunkable(strat24)
+    skew_lb, bounded, unsafe = split_chunkable(strat24)
     print(f"lb={skew_lb} n_bounded={len(bounded)} n_unsafe={len(unsafe)}",
           flush=True)
 
