@@ -462,9 +462,9 @@ def main():
         # the query refreshes the downstream pair cache as a side effect;
         # drop the x10 entry so the deleted temp dir's materialization
         # doesn't pin executor memory through the scale entries below
-        from pandas_ta_spark.ext.dedup import invalidate_pairs_dir
+        from pandas_ta_spark.caches import invalidate_dir
 
-        invalidate_pairs_dir(spark, x10_dir)
+        invalidate_dir(spark, x10_dir)
         shutil.rmtree(x10_dir, ignore_errors=True)
 
     # ANN at 10x corpus: the same would-it-scale measurement for the IVF
@@ -502,7 +502,7 @@ def main():
         ivf_build_net = round(
             max(times["topk_cosine_ivf_x10_build"] - best, 0.0), 3)
     finally:
-        from pandas_ta_spark.ext.similarity import invalidate_dir
+        from pandas_ta_spark.caches import invalidate_dir
 
         invalidate_dir(spark, x10v_dir)
         shutil.rmtree(x10v_dir, ignore_errors=True)

@@ -11,7 +11,9 @@ and falls back to eager localCheckpoint otherwise.
 
 Call sites: the gate's shared bars derivation (sources/bars.py), the
 verified near-dup pair set and the CC label-propagation rounds
-(ext/dedup.py).
+(ext/dedup.py), the vector relation and IVF/PQ index artifacts
+(ext/similarity.py), the n-gram novelty bigram counts (ext/text.py),
+and the streaming corpus indexes (streaming/corpus.py).
 
 Cleanup: reliable checkpoint files are NOT removed automatically —
 ``spark.cleaner.referenceTracking.cleanCheckpoints`` defaults to false,

@@ -16,6 +16,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandas_ta_spark.caches import SessionCache, table_fingerprint
 from pandas_ta_spark.ckpt import materialize
 from pandas_ta_spark.ext import ExtQuery  # noqa: TID252  (package root)
 from pandas_ta_spark.sources.bars import load_table
@@ -303,8 +304,8 @@ def _dedup_minhash_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # refresh the downstream-consumer cache (see _pairs_cached): this call
     # always derives fresh — so its own cost stays honestly measured — but
     # keep-list/CC/telemetry consumers get the newest materialization free
-    _PAIRS_CACHE[_pairs_key(spark, sf_dir)] = out
-    return out
+    return _PAIRS_CACHE.put(SessionCache.key(
+        spark, sf_dir, version=table_fingerprint(sf_dir, "documents")), out)
 
 
 def _signature_ctes() -> str:
@@ -519,45 +520,18 @@ SELECT doc_id, {bits} AS simhash16 FROM agg
 # curation pipeline all start from the SAME pairs. _dedup_minhash already
 # materializes them (localCheckpoint, tiny), so re-deriving the full
 # shingle->signature->band->verify chain per consumer triples the gate's
-# most expensive derivation for no new information. Keyed per
-# (applicationId, sf_dir) — applicationId is unique per context, unlike
-# id(SparkContext), which a new context can reuse after GC. The public
+# most expensive derivation for no new information. The public
 # `dedup_minhash_lsh` query itself stays UNCACHED so its benchmark number
 # reports the true derivation cost. At 100 TB the analogue is writing the
 # pair set to a temp table once per pipeline run.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _pairs_key(spark: SparkSession, sf_dir: str) -> tuple:
-    # (applicationId, sf_dir, documents-file-fingerprint): the
-    # fingerprint versions the corpus CONTENT, so a rewrite under the
-    # same path re-derives the pair set instead of serving the stale
-    # materialization (r11, same contract as similarity._dir_key)
-    from pandas_ta_spark.sources.bars import table_fingerprint
-
-    return (spark.sparkContext.applicationId, sf_dir,
-            table_fingerprint(sf_dir, "documents"))
-
-
-def invalidate_pairs_dir(spark: SparkSession, sf_dir: str) -> None:
-    """Drop the cached pair set for (this app, sf_dir) — any
-    fingerprint version (bench teardown uses it)."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _PAIRS_CACHE
-              if k[0] == app and k[1] == sf_dir]:
-        del _PAIRS_CACHE[k]
+_PAIRS_CACHE = SessionCache()
 
 
 def _pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pandas_ta_spark.sources.bars import evict_dir_keys
-
-    key = _pairs_key(spark, sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        evict_dir_keys(_PAIRS_CACHE, key)
-        df = _dedup_minhash(spark, sf_dir)
-        _PAIRS_CACHE[key] = df
-    return df
+    hit = _PAIRS_CACHE.get(SessionCache.key(
+        spark, sf_dir, version=table_fingerprint(sf_dir, "documents")))
+    # a miss derives fresh, and _dedup_minhash stores what it derives
+    return hit if hit is not None else _dedup_minhash(spark, sf_dir)
 
 
 def _dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:

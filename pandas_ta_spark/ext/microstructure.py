@@ -49,6 +49,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pandas_ta_spark.caches import SessionCache
 from pandas_ta_spark.ext import ExtQuery
 from pandas_ta_spark.operators.base import round_col, sql_round
 from pandas_ta_spark.sources.bars import bars_from_events_cached, with_bars_cte
@@ -1274,8 +1275,7 @@ def _top_dollar_volume(bars: DataFrame, top_n: int) -> DataFrame:
 #   * anything unkeyable returns None and the caller bounds
 #     unconditionally (the safe direction).
 # `invalidate_symbol_counts()` is the explicit hook for write paths.
-_SYMBOL_COUNT_CACHE: dict[tuple[str, int, int], int] = {}
-_SYMBOL_COUNT_CACHE_MAX = 256
+_SYMBOL_COUNT_CACHE = SessionCache()
 
 
 def invalidate_symbol_counts() -> None:
@@ -1288,18 +1288,15 @@ def invalidate_symbol_counts() -> None:
 def _symbol_count_cached(bars: DataFrame) -> int | None:
     try:
         h = int(bars._jdf.queryExecution().analyzed().semanticHash())
-        app = bars.sparkSession.sparkContext.applicationId
         # data-version signal: the analyzed plan's file listing (cheap —
         # the file index is already built and cached by analysis)
-        fp = hash(tuple(sorted(bars.inputFiles())))
+        key = SessionCache.key(bars.sparkSession, h,
+                               version=hash(tuple(sorted(bars.inputFiles()))))
     except Exception:
         return None  # unkeyable plan: caller bounds unconditionally
-    key = (app, h, fp)
     n = _SYMBOL_COUNT_CACHE.get(key)
     if n is None:
-        for stale in [k for k in _SYMBOL_COUNT_CACHE if k[0] != app]:
-            del _SYMBOL_COUNT_CACHE[stale]
-        if len(_SYMBOL_COUNT_CACHE) >= _SYMBOL_COUNT_CACHE_MAX:
+        if len(_SYMBOL_COUNT_CACHE) >= 256:  # bound: one entry per bar plan
             _SYMBOL_COUNT_CACHE.clear()
         # NULL symbols never survive the semi-join (null keys match
         # nothing), so they must not count toward the universe either —
@@ -1307,7 +1304,7 @@ def _symbol_count_cached(bars: DataFrame) -> int | None:
         # row-identical
         n = (bars.filter(F.col("symbol").isNotNull())
              .select("symbol").distinct().count())
-        _SYMBOL_COUNT_CACHE[key] = n
+        _SYMBOL_COUNT_CACHE.put(key, n)
     return n
 
 

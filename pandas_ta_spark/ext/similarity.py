@@ -18,6 +18,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandas_ta_spark.caches import SessionCache, table_fingerprint
 from pandas_ta_spark.ckpt import materialize
 from pandas_ta_spark.ext import ExtQuery
 from pandas_ta_spark.operators.base import round_col, sql_round
@@ -113,50 +114,15 @@ def _spark_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The normalized vector relation feeds every similarity query (brute, LSH,
 # near-dup, IVF train/assign/probe, recall) — materialize it once per
-# (applicationId, sf_dir) — unique per context, unlike id() — instead of letting
-# each query (and each IVF phase) re-derive cast+norm from the scan, or
-# leak a per-invocation persist. At 100 TB this is the persisted
-# "embedding table + norms" any resident vector engine keeps.
-#
-# INVALIDATION CONTRACT (applies to _VECS_CACHE, _IVF_CACHE, _PQ_CACHE):
-# keys are (applicationId, sf_dir, embeddings-file-fingerprint) — the
-# fingerprint (sources/bars.py table_fingerprint: names+sizes+mtimes of
-# the table's files) is the content-version signal, so rewriting or
-# appending the parquet under the same path mid-session re-derives the
-# vectors AND retrains the index instead of serving a stale snapshot
-# (r11; previously the caller had to pop the key by hand). Superseded
-# fingerprints of the same dir are evicted on the next build so the old
-# materialization doesn't stay pinned. Non-local URIs fingerprint as
-# None — path = corpus version, the pre-r11 contract (an ANN deployment
-# on an object store versions its corpus by immutable snapshot dirs).
-# `invalidate_dir(spark, sf_dir)` drops all three caches' entries for a
-# dir explicitly (bench teardown uses it).
-_VECS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _dir_key(spark: SparkSession, sf_dir: str) -> tuple:
-    from pandas_ta_spark.sources.bars import table_fingerprint
-
-    return (spark.sparkContext.applicationId, sf_dir,
-            table_fingerprint(sf_dir, "embeddings"))
-
-
-def invalidate_dir(spark: SparkSession, sf_dir: str) -> None:
-    """Drop every vector/index cache entry for (this app, sf_dir) —
-    any fingerprint version."""
-    app = spark.sparkContext.applicationId
-    for cache in (_VECS_CACHE, _IVF_CACHE, _PQ_CACHE):
-        for k in [k for k in cache if k[0] == app and k[1] == sf_dir]:
-            del cache[k]
+# session instead of letting each query (and each IVF phase) re-derive
+# cast+norm from the scan, or leak a per-invocation persist. At 100 TB
+# this is the persisted "embedding table + norms" any resident vector
+# engine keeps.
+_VECS_CACHE = SessionCache()
 
 
 def _spark_vectors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pandas_ta_spark.sources.bars import evict_dir_keys
-
-    key = _dir_key(spark, sf_dir)
-    df = _VECS_CACHE.get(key)
-    if df is None:
-        evict_dir_keys(_VECS_CACHE, key)
+    def build():
         # Lay the resident vector relation out at cluster parallelism:
         # the source parquet's split count (a writer artifact — the x10
         # bench corpus is coalesce(4)) would otherwise cap EVERY
@@ -166,9 +132,11 @@ def _spark_vectors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # independent everywhere (fixed-point sums, per-vector argmax),
         # so the layout is free to change.
         par = spark.sparkContext.defaultParallelism
-        df = materialize(_spark_vectors(spark, sf_dir).repartition(par))
-        _VECS_CACHE[key] = df
-    return df
+        return materialize(_spark_vectors(spark, sf_dir).repartition(par))
+
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "embeddings"))
+    return _VECS_CACHE.cached(key, build)
 
 
 def _dot_str(a: str, b: str) -> str:
@@ -585,13 +553,11 @@ TRAIN_CAP = 4096  # hard bound on collected training vectors (id < MOD*CAP)
 # file) is a BUILD artifact, not per-query work: a resident ANN engine
 # trains once and serves every probe from the same lists — re-deriving
 # the Lloyd step per query would be like rebuilding a B-tree per lookup.
-# Cached per (applicationId, sf_dir) like _VECS_CACHE; training is
-# deterministic (fixed seeds + exact fixed-point sums), so cached and
-# fresh indexes are bit-identical and every oracle comparison still
-# holds. First build per session pays the full cost.
-# Same (applicationId, sf_dir) key and invalidation contract as
-# _VECS_CACHE (see the contract block there): path = corpus version.
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
+# Cached per session like _VECS_CACHE; training is deterministic (fixed
+# seeds + exact fixed-point sums), so cached and fresh indexes are
+# bit-identical and every oracle comparison still holds. First build
+# per session pays the full cost.
+_IVF_CACHE = SessionCache()
 
 
 def _train_centroids_numpy(rows) -> list[tuple]:
@@ -728,7 +694,8 @@ def _ivf_lists(spark: SparkSession, sf_dir: str):
     `_train_centroids_numpy`; the driver's oracle gate verifies the
     composed result exactly."""
     v = _spark_vectors_cached(spark, sf_dir)
-    key = _dir_key(spark, sf_dir)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "embeddings"))
     hit = _IVF_CACHE.get(key)
     if hit is not None:
         return (v, *hit)
@@ -769,10 +736,7 @@ def _ivf_lists(spark: SparkSession, sf_dir: str):
     # the on-disk artifact a real IVF deployment persists next to the
     # centroids — so probes scan lists instead of re-running assignment
     lists = materialize(assign_vectors(v, centn))
-    from pandas_ta_spark.sources.bars import evict_dir_keys
-
-    evict_dir_keys(_IVF_CACHE, key)
-    _IVF_CACHE[key] = (centn, lists)
+    _IVF_CACHE.put(key, (centn, lists))
     return v, centn, lists
 
 
@@ -1483,11 +1447,9 @@ M_SUB = 8                 # subspaces
 SUB_DIM = DIM // M_SUB    # 8 dims each
 K_PQ = 8                  # codes per subspace -> 3-bit codes, 8B/vector
 
-# PQ artifacts cached per (applicationId, sf_dir) like the IVF index:
-# codebooks + codes are a build step a resident engine runs once.
-# Same (applicationId, sf_dir) key and invalidation contract as
-# _VECS_CACHE (see the contract block there): path = corpus version.
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
+# PQ artifacts cached per session like the IVF index: codebooks + codes
+# are a build step a resident engine runs once.
+_PQ_CACHE = SessionCache()
 
 
 def _pq_subs(df: DataFrame) -> DataFrame:
@@ -1519,19 +1481,18 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     partition-local. The whole build runs in the input-sized shuffle
     scope (see _shuffle_sized_to_input)."""
     v = _spark_vectors_cached(spark, sf_dir)
-    key = _dir_key(spark, sf_dir)
-    hit = _PQ_CACHE.get(key)
-    if hit is not None:
-        return (v, *hit)
-    from pandas_ta_spark.ext.dedup import _input_bytes, _shuffle_sized_to_input
 
-    with _shuffle_sized_to_input(spark, _input_bytes(spark, sf_dir, "embeddings")):
-        out = _pq_build(spark, v)
-    from pandas_ta_spark.sources.bars import evict_dir_keys
+    def build():
+        from pandas_ta_spark.ext.dedup import (
+            _input_bytes, _shuffle_sized_to_input)
 
-    evict_dir_keys(_PQ_CACHE, key)
-    _PQ_CACHE[key] = out
-    return (v, *out)
+        with _shuffle_sized_to_input(
+                spark, _input_bytes(spark, sf_dir, "embeddings")):
+            return _pq_build(spark, v)
+
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "embeddings"))
+    return (v, *_PQ_CACHE.cached(key, build))
 
 
 def pq_encode(sub: DataFrame, cbdf: DataFrame) -> DataFrame:

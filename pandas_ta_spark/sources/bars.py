@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 
+from pandas_ta_spark.caches import SessionCache, table_fingerprint
+
 BAR_SCHEMA = StructType(
     [
         StructField("symbol", StringType(), False),
@@ -209,73 +211,26 @@ GROUP BY 1, 2
 """.strip()
 
 
-def table_fingerprint(sf_dir: str, table: str):
-    """Data-version signal for the (applicationId, sf_dir)-keyed session
-    caches (VERDICT r10 ask #2 applied engine-wide): a hash of the
-    table's file listing — names, sizes, mtimes. Rewriting or appending
-    under the SAME path changes it, so cached derivations (bars, the
-    minhash pair set, ANN indexes) re-materialize instead of serving a
-    stale snapshot. Handles both single-file tables (the driver data)
-    and part-file directories (bench replicas). Non-local URIs and
-    missing paths return None — the caller keys on the path alone, the
-    pre-r11 contract; the cluster-scale analogue is the object store's
-    listing etag."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if _os.path.isdir(path):
-            entries = []
-            for e in sorted(_os.scandir(path), key=lambda x: x.name):
-                s = e.stat()
-                entries.append((e.name, s.st_size, s.st_mtime_ns))
-            return hash(tuple(entries))
-        st = _os.stat(path)
-        return hash((st.st_size, st.st_mtime_ns))
-    except OSError:
-        return None
-
-
-def evict_dir_keys(cache: dict, key: tuple) -> None:
-    """Shared eviction for fingerprinted session caches: drop entries
-    from stopped applications (one JVM runs one app at a time — other-
-    app keys pin dead sessions) AND superseded fingerprints of the same
-    (app, dir) — the rewritten data's old materialization must not stay
-    pinned behind the new key."""
-    for stale in [k for k in cache
-                  if k[0] != key[0] or (k[:2] == key[:2] and k != key)]:
-        del cache[stale]
-
-
 # Correctness-gate cache: the driver runs ~200 queries against the SAME
 # derived bars table; re-running the events scan+agg per query dominates
 # gate wall time. An eager localCheckpoint materializes the derivation
-# once per (applicationId, sf_dir, events-fingerprint) and truncates
-# lineage, so each gate query starts from in-memory partitions — and a
-# rewrite of events under the same path re-derives instead of serving
-# the stale snapshot. Production paths still call bars_from_events
-# directly — the cache is only for the many-queries-over-one-small-table
-# gate shape (at 100 TB you'd persist to a bucketed table instead, see
-# write_bars_bucketed).
-_BARS_CACHE: dict[tuple, DataFrame] = {}
+# once per session (versioned by the events table) and truncates
+# lineage, so each gate query starts from in-memory partitions.
+# Production paths still call bars_from_events directly — the cache is
+# only for the many-queries-over-one-small-table gate shape (at 100 TB
+# you'd persist to a bucketed table instead, see write_bars_bucketed).
+_BARS_CACHE = SessionCache()
 
 
 def bars_from_events_cached(
     spark: SparkSession, sf_dir: str, anchor: str = "hour"
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, anchor,
-           table_fingerprint(sf_dir, "events"))
-    df = _BARS_CACHE.get(key)
-    if df is None:
-        from pandas_ta_spark.ckpt import materialize
+    from pandas_ta_spark.ckpt import materialize
 
-        for stale in [k for k in _BARS_CACHE
-                      if k[0] != key[0]
-                      or (k[:3] == key[:3] and k != key)]:
-            del _BARS_CACHE[stale]
-        df = materialize(bars_from_events(spark, sf_dir, anchor))
-        _BARS_CACHE[key] = df
-    return df
+    key = SessionCache.key(spark, sf_dir, anchor,
+                           version=table_fingerprint(sf_dir, "events"))
+    return _BARS_CACHE.cached(
+        key, lambda: materialize(bars_from_events(spark, sf_dir, anchor)))
 
 
 def write_bars(df: DataFrame, path: str, partition_days: bool = True) -> None:

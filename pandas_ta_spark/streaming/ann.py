@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandas_ta_spark.caches import SessionCache, table_fingerprint
+
 
 def _probed_queries(queries: DataFrame, centn) -> DataFrame:
     """Normalize the query stream and attach its NPROBE nearest centroid
@@ -426,7 +428,7 @@ def stream_vector_ingest(vecs: DataFrame, spark: SparkSession, sf_dir: str,
     )
 
 
-_CORPUS_MEAN_CACHE: dict = {}
+_CORPUS_MEAN_CACHE = SessionCache()
 
 
 def _corpus_mean_cached(spark: SparkSession, sf_dir: str):
@@ -436,7 +438,6 @@ def _corpus_mean_cached(spark: SparkSession, sf_dir: str):
     build artifact like the centroids and belongs in the session
     cache)."""
     from pandas_ta_spark.ext.similarity import DIM, _spark_vectors_cached
-    from pandas_ta_spark.streaming.corpus import _session_cached
 
     def build():
         cv = _spark_vectors_cached(spark, sf_dir)
@@ -453,7 +454,9 @@ def _corpus_mean_cached(spark: SparkSession, sf_dir: str):
         cnorm = sum(x * x for x in cmean) ** 0.5
         return (cmean, cnorm)
 
-    return _session_cached(_CORPUS_MEAN_CACHE, spark, (sf_dir,), build)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "embeddings"))
+    return _CORPUS_MEAN_CACHE.cached(key, build)
 
 
 def stream_embedding_drift(vecs: DataFrame, spark: SparkSession,

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pandas_ta_spark.caches import SessionCache, table_fingerprint
+
 
 def stream_dedup_exact(docs: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """First-seen exact dedup on a document stream.
@@ -262,27 +264,9 @@ def stream_neardup_candidates(docs: DataFrame,
 
 
 # Static corpus dedup index (banded signatures + verification-key sets),
-# built once per (applicationId, sf_dir) — the "existing corpus" side of
-# the online ingestion gate. Same invalidation contract as the ANN
-# caches (ext/similarity._VECS_CACHE): path = corpus version.
-_CORPUS_INDEX_CACHE: dict = {}
-
-
-def _session_cached(cache: dict, spark, key_tail: tuple, build):
-    """Session-index cache dance shared by the corpus/span/exact index
-    builders (code-review r8: four verbatim copies of the lookup /
-    evict-stale-applications / store logic). Keys are
-    (applicationId, *key_tail); entries from stopped applications are
-    swept on every miss."""
-    key = (spark.sparkContext.applicationId, *key_tail)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    out = build()
-    for stale in [k for k in cache if k[0] != key[0]]:
-        del cache[stale]
-    cache[key] = out
-    return out
+# built once per session per corpus predicate — the "existing corpus"
+# side of the online ingestion gate.
+_CORPUS_INDEX_CACHE = SessionCache()
 
 
 def _fold_decisions(marked: DataFrame) -> DataFrame:
@@ -322,8 +306,9 @@ def _corpus_dedup_index(spark, sf_dir: str, corpus_pred: str | None = None):
                     F.col("ks").alias("corpus_ks"), "corpus_n")
         )
 
-    return _session_cached(_CORPUS_INDEX_CACHE, spark,
-                           (sf_dir, corpus_pred), build)
+    key = SessionCache.key(spark, sf_dir, corpus_pred,
+                           version=table_fingerprint(sf_dir, "documents"))
+    return _CORPUS_INDEX_CACHE.cached(key, build)
 
 
 def stream_dedup_vs_corpus(docs: DataFrame, spark, sf_dir: str,
@@ -407,7 +392,7 @@ def stream_decontamination_gate(docs: DataFrame, spark, sf_dir: str,
 
 # ------------------------------------------------ span-level dup gate ----
 
-_SPAN_INDEX_CACHE: dict = {}
+_SPAN_INDEX_CACHE = SessionCache()
 
 
 def _corpus_span_index(spark, sf_dir: str):
@@ -435,7 +420,9 @@ def _corpus_span_index(spark, sf_dir: str):
             )
         )
 
-    return _session_cached(_SPAN_INDEX_CACHE, spark, (sf_dir,), build)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "documents"))
+    return _SPAN_INDEX_CACHE.cached(key, build)
 
 
 def stream_span_dup_gate(docs: DataFrame, spark, sf_dir: str,
@@ -488,7 +475,7 @@ def stream_span_dup_gate(docs: DataFrame, spark, sf_dir: str,
 
 # -------------------------------------------- embedding (SemDeDup) gate ----
 
-_BANDED_VEC_INDEX_CACHE: dict = {}
+_BANDED_VEC_INDEX_CACHE = SessionCache()
 
 
 def _corpus_banded_vec_index(spark, sf_dir: str):
@@ -515,7 +502,9 @@ def _corpus_banded_vec_index(spark, sf_dir: str):
                     F.posexplode("bands").alias("band", "bits"))
         )
 
-    return _session_cached(_BANDED_VEC_INDEX_CACHE, spark, (sf_dir,), build)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "embeddings"))
+    return _BANDED_VEC_INDEX_CACHE.cached(key, build)
 
 
 def stream_semdedup_gate(vecs: DataFrame, spark, sf_dir: str,
@@ -579,7 +568,7 @@ def stream_semdedup_gate(vecs: DataFrame, spark, sf_dir: str,
 
 # ------------------------------------------- composed curation gate ----
 
-_EXACT_INDEX_CACHE: dict = {}
+_EXACT_INDEX_CACHE = SessionCache()
 
 
 def _corpus_exact_index(spark, sf_dir: str):
@@ -597,7 +586,9 @@ def _corpus_exact_index(spark, sf_dir: str):
             .agg(F.min("doc_id").alias("exact_min"))
         )
 
-    return _session_cached(_EXACT_INDEX_CACHE, spark, (sf_dir,), build)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "documents"))
+    return _EXACT_INDEX_CACHE.cached(key, build)
 
 
 def _curation_marked(docs: DataFrame, spark, sf_dir: str,
@@ -1045,7 +1036,7 @@ def read_ingest_lake(spark, lake_dir: str) -> DataFrame:
     )
 
 
-_VOCAB_CACHE: dict = {}
+_VOCAB_CACHE = SessionCache()
 
 
 def _corpus_vocab_logp(spark, sf_dir: str):
@@ -1078,7 +1069,9 @@ def _corpus_vocab_logp(spark, sf_dir: str):
         return (materialize(vocab.select("token", nlp6.alias("nlp6"))),
                 oov6)
 
-    return _session_cached(_VOCAB_CACHE, spark, (sf_dir,), build)
+    key = SessionCache.key(spark, sf_dir,
+                           version=table_fingerprint(sf_dir, "documents"))
+    return _VOCAB_CACHE.cached(key, build)
 
 
 def stream_perplexity_gate(docs: DataFrame, spark, sf_dir: str,

@@ -490,17 +490,24 @@ def test_media_features_kind_dispatch(spark):
 
 
 def test_session_caches_invalidate_on_rewrite(spark, tmp_path):
-    """r11 engine-wide cache-versioning: every (applicationId, dir)-keyed
-    session cache folds a file fingerprint (names+sizes+mtimes) into its
-    key, so rewriting a table under the SAME path re-derives the cached
-    artifact instead of serving the stale snapshot — bars derivation,
-    the normalized-vector relation, and the explicit invalidation
-    hooks."""
+    """Engine-wide cache-versioning: every SessionCache folds the file
+    fingerprint (names+sizes+mtimes) of the table it derives from into
+    its key, so rewriting a table under the SAME path re-derives the
+    cached artifact instead of serving the stale snapshot — bars
+    derivation, the normalized-vector relation and the corpus mean
+    (embeddings), the exact-dedup index and the pair set (documents),
+    the explicit invalidation hook, and the session release."""
     import os
     import time as _time
 
+    from pandas_ta_spark import caches
+    from pandas_ta_spark.caches import invalidate_dir, release_session_caches
+    from pandas_ta_spark.ext import dedup as D
     from pandas_ta_spark.ext import similarity as S
     from pandas_ta_spark.sources.bars import bars_from_events_cached
+    from pandas_ta_spark.streaming import corpus as C
+    from pandas_ta_spark.streaming.ann import (
+        _CORPUS_MEAN_CACHE, _corpus_mean_cached)
 
     sf = str(tmp_path)
     t0 = pd.Timestamp("2024-01-01")
@@ -533,17 +540,47 @@ def test_session_caches_invalidate_on_rewrite(spark, tmp_path):
 
     write_embeddings(5)
     assert S._spark_vectors_cached(spark, sf).count() == 5
+    assert _corpus_mean_cached(spark, sf)[0][0] == 3.0  # mean of 1..5
     _time.sleep(0.01)
     write_embeddings(7)
     assert S._spark_vectors_cached(spark, sf).count() == 7
+    assert _corpus_mean_cached(spark, sf)[0][0] == 4.0  # mean of 1..7
     # superseded fingerprints were evicted: exactly one live entry for
     # this dir, and the explicit hook clears it
     app = spark.sparkContext.applicationId
     assert sum(1 for k in S._VECS_CACHE
                if k[0] == app and k[1] == sf) == 1
-    S.invalidate_dir(spark, sf)
+    invalidate_dir(spark, sf)
     assert not any(k[0] == app and k[1] == sf for k in S._VECS_CACHE)
     assert os.path.exists(f"{sf}/embeddings.parquet")
+    # ... and so are the bars and the corpus mean: one hook, every cache
+    assert not any(k[1] == sf for c in caches._LIVE for k in c)
+
+    def write_documents(n):
+        pdf = pd.DataFrame({
+            "doc_id": range(n),
+            "text": [f"doc {i} says word{i} then word{i + 1} and stops"
+                     for i in range(n)]})
+        (spark.createDataFrame(pdf).coalesce(1)
+         .write.mode("overwrite").parquet(f"{sf}/documents.parquet"))
+
+    write_documents(3)
+    assert C._corpus_exact_index(spark, sf).count() == 3
+    D._pairs_cached(spark, sf)
+    _time.sleep(0.01)
+    write_documents(7)
+    assert C._corpus_exact_index(spark, sf).count() == 7
+    # the pair query's refresh replaces the superseded pair set
+    D._dedup_minhash(spark, sf)
+    assert sum(1 for k in D._PAIRS_CACHE if k[1] == sf) == 1
+
+    # release drains every live cache, the streaming ones included
+    live = list(caches._LIVE)
+    assert C._EXACT_INDEX_CACHE in live and _CORPUS_MEAN_CACHE in live
+    held = sum(len(c) for c in live)
+    assert held >= 2  # the exact index and the pair set of this dir
+    assert release_session_caches(spark) == held
+    assert all(len(c) == 0 for c in live)
 
 
 def test_bucketed_sink_eliminates_exchange(spark, bars, tmp_path):

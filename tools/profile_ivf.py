@@ -39,6 +39,8 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from pandas_ta_spark.caches import (
+        SessionCache, invalidate_dir, table_fingerprint)
     from pandas_ta_spark.ext import SUITE as EXT
     from pandas_ta_spark.ext import similarity as S
     from pandas_ta_spark.sources.bars import load_table
@@ -96,7 +98,9 @@ def main():
         lists = materialize(S.assign_vectors(v, centn))
         t["invfile_materialize"] = round(time.time() - t0, 3)
 
-        S._IVF_CACHE[S._dir_key(spark, x10v_dir)] = (centn, lists)
+        S._IVF_CACHE.put(SessionCache.key(
+            spark, x10v_dir,
+            version=table_fingerprint(x10v_dir, "embeddings")), (centn, lists))
 
         def force(df):
             df.write.format("noop").mode("overwrite").save()
@@ -115,7 +119,7 @@ def main():
             + t["centroid_create"] + t["invfile_materialize"]
             + t["first_probe"] - t["steady_probe"], 3)
     finally:
-        S.invalidate_dir(spark, x10v_dir)
+        invalidate_dir(spark, x10v_dir)
         shutil.rmtree(x10v_dir, ignore_errors=True)
 
     print(json.dumps({"metric": "ivf_x10_build_profile", "sf_dir": sf_dir,
