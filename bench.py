@@ -114,6 +114,146 @@ def all_indicators():
     return inds
 
 
+def session(cpus):
+    """The bench's SparkSession on local[cpus]."""
+    from pyspark.sql import SparkSession
+
+    # Partitioning at bench scale (few MB, 5 distinct symbols) needs two
+    # deviations from production defaults, both measured on the 24-ind
+    # strategy (4.99s -> ~1s at sf0.1):
+    # - AQE partition coalescing targets 64MB/partition, which collapses
+    #   the whole window stage onto 1-2 cores at this data size; disable
+    #   it (a 100 TB shuffle never hits the floor, so prod keeps it on).
+    # - a PRIME shuffle-partition count: with only 5 distinct keys,
+    #   hash(symbol) mod 32 collides ('error'/'view' share a bucket),
+    #   serializing 40% of the window work behind one task. Prime bucket
+    #   counts minimize collision clumping whenever key cardinality is
+    #   low — the same lever applies to any low-cardinality groupBy.
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", "61")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        # WindowExec buffers each partition's rows and spills to an
+        # UnsafeExternalSorter past 4096 rows — per-symbol partitions here
+        # hold ~20k rows, so every window op paid the external-sorter path.
+        # Raising the in-memory threshold keeps the buffer a plain array
+        # (measured ~1.9x on the window-only strategy). The memory bound is
+        # rows-per-partition x row width; at 100 TB partition sizing
+        # (maxPartitionBytes / shuffle.partitions) keeps that bounded, so
+        # the same setting holds cluster-side.
+        .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
+        .config("spark.sql.windowExec.buffer.spill.threshold", "2097152")
+        .config("spark.driver.memory", "16g")
+        # managed-table sink for the bucketed re-read entry goes to a
+        # temp dir, not ./spark-warehouse in the repo
+        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="bench_wh_"))
+        .appName("pandas-ta-spark-bench")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def cached_ticks(spark, sf_dir):
+    """The tick series, cached hash(symbol)-partitioned and counted."""
+    # the events parquet is a single split at sf0.1, so an un-repartitioned
+    # cache leaves the shuffle-map side of every strategy query a single
+    # task serializing 100k rows alone. r13: cache HASH(symbol)-
+    # partitioned instead of round-robin(8) — the cached partitioning
+    # satisfies every window/kernel stage's ClusteredDistribution, so the
+    # per-rep Exchange disappears from the headline plans entirely
+    # (verified: 0 Exchanges above the InMemoryTableScan; ~15% off the
+    # 24-ind wall, the r12 ask to buy 2x-bar headroom). Input layout
+    # prep, untimed — at 100 TB this is "keep the tick store bucketed by
+    # symbol", the same lever as the bucketed_read entry in main().
+    ticks = tick_bars(spark, sf_dir).repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "symbol")
+    ticks.cache().count()  # warm: scan + JVM
+    return ticks
+
+
+def replicate(ticks, n):
+    """n relabelled copies of the tick series (n x 5 sub-series).
+
+    The scale demo: the throughput question the 100 TB design answers —
+    fixed overhead amortizes, window work parallelizes across series."""
+    from pyspark.sql import functions as F
+
+    rep = F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep")
+    return (
+        ticks.select("*", rep)
+        .select(
+            F.concat("symbol", F.lit("#"), F.col("rep")).alias("symbol"),
+            "ts", "open", "high", "low", "close", "volume",
+        )
+    )
+
+
+def skew_frame(ticks):
+    """The x20 replica with 80% of its rows on ONE symbol ("HOT")."""
+    from pyspark.sql import functions as F
+
+    rep = F.explode(F.sequence(F.lit(0), F.lit(19))).alias("rep")
+    return (
+        ticks.select("*", rep)
+        .select(
+            F.when(F.col("rep") < 16, F.lit("HOT"))  # 16/20 = 80%
+            .otherwise(F.concat("symbol", F.lit("#"), F.col("rep")))
+            .alias("symbol"),
+            # the hot symbol needs a unique per-row timeline: offset each
+            # replica by its own multi-year stride so ts stays distinct
+            F.timestamp_add("SECOND",
+                            F.col("rep") * F.lit(400_000_000), F.col("ts"))
+            .alias("ts"),
+            "open", "high", "low", "close", "volume",
+        )
+    )
+
+
+def write_x10_vectors(spark, sf_dir, out_dir):
+    """Write a 10x embeddings corpus to ``out_dir``. Replicas are slightly
+    perturbed (rep-dependent offset) so the geometry stays
+    non-degenerate."""
+    from pyspark.sql import functions as F
+
+    from pandas_ta_spark.sources.bars import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    repd = F.explode(F.sequence(F.lit(0), F.lit(9))).alias("rep")
+    pert = F.transform(
+        F.col("embedding"),
+        lambda x: x + F.col("rep").cast("double") * F.lit(0.001),
+    )
+    (emb.select("*", repd)
+        .select((F.col("vec_id") * 10 + F.col("rep")).alias("vec_id"),
+                pert.alias("embedding"), "label")
+        .coalesce(4)
+        .write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet"))
+
+
+# Unsalted 5-symbol strategies run at 11 shuffle partitions: with only 5
+# window groups, every extra task is pure scheduler overhead ACROSS EVERY
+# STAGE of the plan. 11 is the SMALLEST prime that hashes these 5
+# symbols collision-free (measured: p=7 collides to 2 buckets and
+# serializes the window stage, 1.32s; p=11/13 give 5 buckets at 0.72s vs
+# 0.81s at the old 31 — the r9 prime sweep). Salted/replicated variants
+# keep 61 (40-100 real groups). At 100 TB symbol cardinality >>
+# partitions, so this low-cardinality collision tuning disappears.
+QUERY_CONF = {
+    "tick_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
+    "bars_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
+    "tick_strategy_all145ind": {"spark.sql.shuffle.partitions": "11"},
+    # the sf0.1 vector relation holds 2k keys; 61 shuffle partitions
+    # is ~30 keys/task of pure scheduler overhead across the
+    # stats-broadcast + code-rollup stages (measured isolated:
+    # 1.0s @ 61 -> 0.31s @ 8, identical plan). The same
+    # partition-sizing lever as the 31-partition strategies; at
+    # 100 TB maxPartitionBytes/shuffle sizing replaces the constant.
+    "embedding_quantize_sq": {"spark.sql.shuffle.partitions": "8"},
+}
+
+
 def force(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -157,42 +297,7 @@ def main():
 
     baseline = same_session_pandas_baseline(sf_dir)
 
-    from pyspark.sql import SparkSession
-
-    # Partitioning at bench scale (few MB, 5 distinct symbols) needs two
-    # deviations from production defaults, both measured on the 24-ind
-    # strategy (4.99s -> ~1s at sf0.1):
-    # - AQE partition coalescing targets 64MB/partition, which collapses
-    #   the whole window stage onto 1-2 cores at this data size; disable
-    #   it (a 100 TB shuffle never hits the floor, so prod keeps it on).
-    # - a PRIME shuffle-partition count: with only 5 distinct keys,
-    #   hash(symbol) mod 32 collides ('error'/'view' share a bucket),
-    #   serializing 40% of the window work behind one task. Prime bucket
-    #   counts minimize collision clumping whenever key cardinality is
-    #   low — the same lever applies to any low-cardinality groupBy.
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "61")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        # WindowExec buffers each partition's rows and spills to an
-        # UnsafeExternalSorter past 4096 rows — per-symbol partitions here
-        # hold ~20k rows, so every window op paid the external-sorter path.
-        # Raising the in-memory threshold keeps the buffer a plain array
-        # (measured ~1.9x on the window-only strategy). The memory bound is
-        # rows-per-partition x row width; at 100 TB partition sizing
-        # (maxPartitionBytes / shuffle.partitions) keeps that bounded, so
-        # the same setting holds cluster-side.
-        .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-        .config("spark.sql.windowExec.buffer.spill.threshold", "2097152")
-        .config("spark.driver.memory", "16g")
-        # managed-table sink for the bucketed re-read entry goes to a
-        # temp dir, not ./spark-warehouse in the repo
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="bench_wh_"))
-        .appName("pandas-ta-spark-bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus)
 
     from pandas_ta_spark.ext import SUITE as EXT
     from pandas_ta_spark.ext.similarity import (
@@ -202,38 +307,13 @@ def main():
     from pandas_ta_spark.registry import make
     from pandas_ta_spark.sources.bars import bars_from_events
 
-    # the events parquet is a single split at sf0.1, so an un-repartitioned
-    # cache leaves the shuffle-map side of every strategy query a single
-    # task serializing 100k rows alone. r13: cache HASH(symbol)-
-    # partitioned instead of round-robin(8) — the cached partitioning
-    # satisfies every window/kernel stage's ClusteredDistribution, so the
-    # per-rep Exchange disappears from the headline plans entirely
-    # (verified: 0 Exchanges above the InMemoryTableScan; ~15% off the
-    # 24-ind wall, the r12 ask to buy 2x-bar headroom). Input layout
-    # prep, untimed — at 100 TB this is "keep the tick store bucketed by
-    # symbol", the same lever as the bucketed_read entry below.
-    ticks = tick_bars(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "symbol")
+    ticks = cached_ticks(spark, sf_dir)
     bars = bars_from_events(spark, sf_dir)
-    ticks.cache().count()  # warm: scan + JVM
     bars.cache().count()
 
     ticks_salted = tick_bars(spark, sf_dir, buckets=8)  # 40 sub-series
 
-    # scale demo: 20x-replicated series (2M rows, 100 independent
-    # sub-series) — the throughput question the 100 TB design answers:
-    # fixed overhead amortizes, window work parallelizes across series
     from pyspark.sql import functions as F
-
-    def replicate(n):
-        rep = F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep")
-        return (
-            ticks.select("*", rep)
-            .select(
-                F.concat("symbol", F.lit("#"), F.col("rep")).alias("symbol"),
-                "ts", "open", "high", "low", "close", "volume",
-            )
-        )
 
     # Indicator lists are built ONCE (immutable plan fragments — a
     # resident engine constructs its expression trees at startup, not per
@@ -335,29 +415,8 @@ def main():
     #   run pays one-time Python-worker spawn + codegen compile, which a
     #   resident cluster amortizes away; measured rep0 6.7s, rep1 2.2s,
     #   rep2+ steady ~1.5s on the 24-ind strategy).
-    # Unsalted 5-symbol strategies additionally run at 11 shuffle
-    # partitions: with only 5 window groups, every extra task is pure
-    # scheduler overhead ACROSS EVERY STAGE of the plan. 11 is the
-    # SMALLEST prime that hashes these 5 symbols collision-free
-    # (measured: p=7 collides to 2 buckets and serializes the window
-    # stage, 1.32s; p=11/13 give 5 buckets at 0.72s vs 0.81s at the old
-    # 31 — the r9 prime sweep). Salted/replicated variants keep 61
-    # (40-100 real groups). At 100 TB symbol cardinality >> partitions,
-    # so this low-cardinality collision tuning disappears.
     HEADLINES = ("tick_strategy_24ind", "tick_strategy_all145ind")
     ONE_SHOT = ("vecs_cache_build",)  # builds: rep0 IS the number
-    QUERY_CONF = {
-        "tick_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
-        "bars_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
-        "tick_strategy_all145ind": {"spark.sql.shuffle.partitions": "11"},
-        # the sf0.1 vector relation holds 2k keys; 61 shuffle partitions
-        # is ~30 keys/task of pure scheduler overhead across the
-        # stats-broadcast + code-rollup stages (measured isolated:
-        # 1.0s @ 61 -> 0.31s @ 8, identical plan). The same
-        # partition-sizing lever as the 31-partition strategies; at
-        # 100 TB maxPartitionBytes/shuffle sizing replaces the constant.
-        "embedding_quantize_sq": {"spark.sql.shuffle.partitions": "8"},
-    }
 
     def timed_reps(build, n):
         out = []
@@ -474,19 +533,7 @@ def main():
     # amortizes) and the steady probe best-of-2.
     x10v_dir = tempfile.mkdtemp(prefix="bench_vecs_x10_")
     try:
-        from pandas_ta_spark.sources.bars import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        repd = F.explode(F.sequence(F.lit(0), F.lit(9))).alias("rep")
-        pert = F.transform(
-            F.col("embedding"),
-            lambda x: x + F.col("rep").cast("double") * F.lit(0.001),
-        )
-        (emb.select("*", repd)
-            .select((F.col("vec_id") * 10 + F.col("rep")).alias("vec_id"),
-                    pert.alias("embedding"), "label")
-            .coalesce(4)
-            .write.mode("overwrite").parquet(f"{x10v_dir}/embeddings.parquet"))
+        write_x10_vectors(spark, sf_dir, x10v_dir)
         t0 = time.time()
         force(EXT["topk_cosine_ivf"].query(spark, x10v_dir))
         # NOTE: this rep0 number is BUILD + ONE PROBE (the query that
@@ -514,7 +561,7 @@ def main():
     # analogue is not caching inputs you are not currently scanning.
     for name, n in (("tick_strategy_24ind_x20scale", 20),
                     ("tick_strategy_24ind_x100scale", 100)):
-        rep_df = replicate(n)
+        rep_df = replicate(ticks, n)
         rep_df.cache().count()
         best = float("inf")
         for _ in range(3):
@@ -549,21 +596,7 @@ def main():
     from pandas_ta_spark.plans.strategy import (
         apply_strategy_chunked, split_chunkable)
 
-    rep = F.explode(F.sequence(F.lit(0), F.lit(19))).alias("rep")
-    skew_df = (
-        ticks.select("*", rep)
-        .select(
-            F.when(F.col("rep") < 16, F.lit("HOT"))  # 16/20 = 80%
-            .otherwise(F.concat("symbol", F.lit("#"), F.col("rep")))
-            .alias("symbol"),
-            # the hot symbol needs a unique per-row timeline: offset each
-            # replica by its own multi-year stride so ts stays distinct
-            F.timestamp_add("SECOND",
-                            F.col("rep") * F.lit(400_000_000), F.col("ts"))
-            .alias("ts"),
-            "open", "high", "low", "close", "volume",
-        )
-    )
+    skew_df = skew_frame(ticks)
     # chunk-safe subset of strat24 (the rule apply_strategy_chunked
     # enforces), lookback = its deepest window
     skew_lb, bounded, _ = split_chunkable(strat24)
@@ -606,7 +639,7 @@ def main():
         skew_df.unpersist(blocking=True)
     # uniform denominator for the bounded-chunked bar (same subset,
     # even symbols): reuse the cached x20 uniform replica shape
-    uni_df = replicate(20)
+    uni_df = replicate(ticks, 20)
     uni_df.cache().count()
     try:
         best = float("inf")
@@ -633,7 +666,7 @@ def main():
         plan = df._jdf.queryExecution().executedPlan().toString()
         return len(_re.findall(r"Exchange (?!SinglePartition)", plan))
 
-    rep20 = replicate(20)
+    rep20 = replicate(ticks, 20)
     bk_dir = tempfile.mkdtemp(prefix="bench_bars_x20_")
     bucketed_read = {}
     try:

@@ -123,6 +123,16 @@ def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> str:
     return "; ".join(bad) if bad else ""
 
 
+def verdict(tag: str, key: str, detail: str, total: float, spark_s: float,
+            oracle_s: float | None = None) -> str:
+    """One per-key verdict line: total seconds, then the Spark and (when an
+    oracle ran) DuckDB seconds. tools/scale_gate.py's _LINE parses it."""
+    split = f"spark {spark_s:.1f}s"
+    if oracle_s is not None:
+        split += f", oracle {oracle_s:.1f}s"
+    return f"{tag:5s} {key}: {detail} ({total:.1f}s; {split})"
+
+
 def main(keys: list[str]) -> int:
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
@@ -168,11 +178,14 @@ def main(keys: list[str]) -> int:
             print(f"FAIL  {k}: spark error: {type(e).__name__}: {str(e)[:300]}")
             n_bad += 1
             continue
+        spark_s = time.time() - t0
         if k not in orc:
             status = "rows-only" if len(sdf) > 0 else "ROWS-ONLY-EMPTY"
-            print(f"{'ok?  ' if len(sdf) else 'FAIL '} {k}: {status} rows={len(sdf)} ({time.time()-t0:.1f}s)")
+            print(verdict("ok?" if len(sdf) else "FAIL", k,
+                          f"{status} rows={len(sdf)}", time.time() - t0, spark_s))
             n_rowsonly += 1
             continue
+        t1 = time.time()
         try:
             con = fresh_con()
             try:
@@ -183,12 +196,14 @@ def main(keys: list[str]) -> int:
             print(f"FAIL  {k}: oracle error: {type(e).__name__}: {str(e)[:300]}")
             n_bad += 1
             continue
+        oracle_s = time.time() - t1
         msg = compare(sdf, odf)
         if msg:
-            print(f"FAIL  {k}: {msg} ({time.time()-t0:.1f}s)")
+            print(verdict("FAIL", k, msg, time.time() - t0, spark_s, oracle_s))
             n_bad += 1
         else:
-            print(f"OK    {k}: rows={len(sdf)} ({time.time()-t0:.1f}s)")
+            print(verdict("OK", k, f"rows={len(sdf)}", time.time() - t0,
+                          spark_s, oracle_s))
             n_ok += 1
         if release_between:
             del sdf, odf

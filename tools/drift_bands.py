@@ -3,7 +3,7 @@
 VERDICT r10 ask #1: the x10-family bench keys (ivf build, minhash x10,
 vecs_cache_build, x100 throughput) drifted r9->r10 without an isolation
 measurement. tools/drift_isolate.sh runs bench.py 5x (interleaved with
-3x profile_ivf.py) on a quiet box; this script reduces those runs to
+3x `tools/profile.py ivf`) on a quiet box; this script reduces those runs to
 min/median/max per key plus the ivf stage attribution, writes
 artifacts/drift_r11/DRIFT.json, and bench.py embeds it as
 ``noise_bands`` in every subsequent bench artifact so BENCH_r{N} carries

@@ -7,6 +7,8 @@
 set -u
 cd /root/repo
 OUT=${1:-artifacts/drift_r11}
+# bench.py's default input, which tools/profile.py needs spelled out
+export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-$(dirname "$PWD")/testdata/sf0.1}"
 mkdir -p "$OUT"
 for i in 1 2 3 4 5; do
   echo "=== bench run $i $(date +%T) ==="
@@ -14,7 +16,7 @@ for i in 1 2 3 4 5; do
   grep -h '"metric"' "$OUT/bench_$i.out" | tail -1 > "$OUT/bench_$i.json"
   if [ $i -le 3 ]; then
     echo "=== ivf profile $i $(date +%T) ==="
-    python tools/profile_ivf.py > "$OUT/ivf_$i.out" 2> "$OUT/ivf_$i.err"
+    python tools/profile.py ivf > "$OUT/ivf_$i.out" 2> "$OUT/ivf_$i.err"
     grep -h 'ivf_x10_build_profile' "$OUT/ivf_$i.out" | tail -1 > "$OUT/ivf_$i.json"
   fi
 done

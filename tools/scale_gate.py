@@ -65,8 +65,11 @@ SCALE_KEYS = [
 ]
 
 
-_LINE = re.compile(r"^(OK|FAIL|ok\?)\s+(\S+?):.*?\((\d+(?:\.\d+)?)s\)",
-                   re.M)
+# tools/check.py's verdict lines: "<tag> <key>: <detail> (<total>s; spark
+# <s>s[, oracle <s>s])"; the oracle part is absent on rows-only keys
+_NUM = r"(\d+(?:\.\d+)?)"
+_LINE = re.compile(rf"^(OK|FAIL|ok\?)\s+(\S+?):.*?\({_NUM}s; spark {_NUM}s"
+                   rf"(?:, oracle {_NUM}s)?\)", re.M)
 RECALL_FLOOR = 0.9  # x-replica mean recall must keep >= 90% of base
 
 
@@ -167,7 +170,6 @@ def _heavy_mem_g() -> int:
 def _run_slice(slice_keys: list[str], env: dict,
                timeout: int = SLICE_TIMEOUT) -> dict[str, dict]:
     """One check.py subprocess over <=8 keys; parse per-key verdicts."""
-    results: dict[str, dict] = {}
     try:
         r = subprocess.run(
             [sys.executable, os.path.join(HERE, "check.py"), *slice_keys],
@@ -181,17 +183,25 @@ def _run_slice(slice_keys: list[str], env: dict,
         out = (exc.stdout or b"").decode() if isinstance(
             exc.stdout, bytes) else (exc.stdout or "")
         print(f"SLICE TIMEOUT after {timeout}s: {slice_keys}")
-    for status, key, sec in _LINE.findall(out):
+    return parse_verdicts(out)
+
+
+def parse_verdicts(out: str) -> dict[str, dict]:
+    """Per-key verdicts from check.py's stdout (Spark log lines ignored)."""
+    results: dict[str, dict] = {}
+    for status, key, sec, spark_sec, oracle_sec in _LINE.findall(out):
         results[key] = {
             "ok": status in ("OK", "ok?"),
             "status": {"OK": "ok", "FAIL": "fail",
                        "ok?": "rows-only"}[status],
             "sec": float(sec),
+            "spark_sec": float(spark_sec),
+            "oracle_sec": float(oracle_sec) if oracle_sec else None,
         }
     # FAIL lines without a timing suffix (spark/oracle errors)
     for m in re.finditer(r"^FAIL\s+(\S+?):", out, re.M):
-        results.setdefault(m.group(1),
-                           {"ok": False, "status": "fail", "sec": None})
+        results.setdefault(m.group(1), {"ok": False, "status": "fail", "sec": None,
+                                        "spark_sec": None, "oracle_sec": None})
     return results
 
 
