@@ -232,18 +232,18 @@ def write_x10_vectors(spark, sf_dir, out_dir):
         .write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet"))
 
 
-# Unsalted 5-symbol strategies run at 11 shuffle partitions: with only 5
-# window groups, every extra task is pure scheduler overhead ACROSS EVERY
-# STAGE of the plan. 11 is the SMALLEST prime that hashes these 5
-# symbols collision-free (measured: p=7 collides to 2 buckets and
-# serializes the window stage, 1.32s; p=11/13 give 5 buckets at 0.72s vs
-# 0.81s at the old 31 — the r9 prime sweep). Salted/replicated variants
-# keep 61 (40-100 real groups). At 100 TB symbol cardinality >>
+# Per-query shuffle partitions, only for plans that shuffle above their
+# input (the tick strategies read the hash(symbol)-partitioned cache of
+# cached_ticks with no exchange, so they keep its 61 partitions). The
+# bars strategy shuffles its 5 symbols at 11: with only 5 window groups,
+# every extra task is pure scheduler overhead ACROSS EVERY STAGE of the
+# plan, and 11 is the SMALLEST prime that hashes these 5 symbols
+# collision-free (measured: p=7 collides to 2 buckets and serializes the
+# window stage, 1.32s; p=11/13 give 5 buckets at 0.72s vs 0.81s at the
+# old 31 — the r9 prime sweep). At 100 TB symbol cardinality >>
 # partitions, so this low-cardinality collision tuning disappears.
 QUERY_CONF = {
-    "tick_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
     "bars_strategy_24ind": {"spark.sql.shuffle.partitions": "11"},
-    "tick_strategy_all145ind": {"spark.sql.shuffle.partitions": "11"},
     # the sf0.1 vector relation holds 2k keys; 61 shuffle partitions
     # is ~30 keys/task of pure scheduler overhead across the
     # stats-broadcast + code-rollup stages (measured isolated:

@@ -104,24 +104,51 @@ def global_rn0(df: DataFrame, out: str = "_pts_rn0",
     bucket-serial sort, never to a wrong rank, and the offset window
     always runs on the narrow count relation.
     Output column order: df's columns, then ``out``."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     b_us = RANK_BUCKET_US if bucket_us is None else bucket_us
+    return _bucket_rank(df, b_us, out).select(
+        *[F.col(f"`{c}`") for c in df.columns], F.col(out))
+
+
+def _bucket_rank(df: DataFrame, bucket_us: int, out: str = "_pts_rn0",
+                 carry: int | None = None) -> DataFrame:
+    """``global_rn0``'s two-level rank, keeping the bucket as
+    ``_pts_bkt``. With ``carry``, each row also gets ``_pts_nxt``: the
+    (bucket, lo, hi) entries of its symbol's later buckets whose first
+    row lies within ``carry`` rows after its bucket's last row, where
+    [lo, hi) = [start - carry, start) are the ranks such a bucket takes
+    as carry. Every bucket holds >= 1 row, so at most ``carry``
+    following buckets qualify; the list is cut on the offsets relation
+    (one entry per (symbol, bucket), not per row) and rides the join
+    the rank pays anyway. Output: df's columns, ``out``, ``_pts_bkt``
+    (and ``_pts_nxt``)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     b = df.withColumn("_pts_bkt", F.coalesce(
-        F.floor(us / F.lit(b_us)).cast("long"), F.lit(-(2 ** 63))))
+        F.floor(us / F.lit(bucket_us)).cast("long"), F.lit(-(2 ** 63))))
     surrogate = {"_pts_sk": F.coalesce(F.col("symbol"), F.lit("")),
                  "_pts_sn": F.col("symbol").isNull()}
     key = [*surrogate, "_pts_bkt"]
     wb = Window.partitionBy(*key).orderBy("ts")
     counts = b.groupBy("symbol", "_pts_bkt").count()
-    woff = (Window.partitionBy("symbol").orderBy("_pts_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    offs = counts.withColumn(
-        "_pts_off",
-        F.coalesce(F.sum("count").over(woff), F.lit(0)).cast("long"),
-    ).withColumns(surrogate).select(*key, "_pts_off")
+    wsym = Window.partitionBy("symbol").orderBy("_pts_bkt")
+    offs = counts.withColumn("_pts_off", F.coalesce(F.sum("count").over(
+        wsym.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)).cast("long"))
+    nxt = []
+    if carry is not None:
+        start = F.col("_pts_off")
+        later = F.collect_list(F.struct(
+            F.col("_pts_bkt").alias("_pts_chk"),
+            (start - F.lit(carry)).alias("_pts_lo"), start.alias("_pts_hi"),
+        )).over(wsym.rowsBetween(1, max(carry, 1)))
+        end = start + F.col("count")
+        offs = offs.withColumn("_pts_nxt", F.filter(
+            later, lambda e: e["_pts_lo"] < end))
+        nxt = ["_pts_nxt"]
+    offs = offs.withColumns(surrogate).select(*key, "_pts_off", *nxt)
     ranked = (
         b.withColumns(surrogate)
         .withColumn("_pts_brn", F.row_number().over(wb))
@@ -131,7 +158,7 @@ def global_rn0(df: DataFrame, out: str = "_pts_rn0",
     # restore df's column order (the join fronts its keys); backticks:
     # pass-through names may be dotted (BBL_5_2.0)
     return ranked.select(*[F.col(f"`{c}`") for c in df.columns],
-                         F.col(out))
+                         out, "_pts_bkt", *nxt)
 
 
 def _out_schema(df: DataFrame, specs: list[KernelSpec]) -> StructType:
@@ -215,7 +242,11 @@ def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
         # cols, and inside a strategy rows already arrive ts-sorted from
         # the window stage, so the common case skips the sort entirely.
         # Row order of the returned group is irrelevant to Spark.
+        # int64 view: NaT is int64 min, so a NULL ts sorts first as in
+        # every window (datetime64 argsort puts NaT last)
         ts = pdf["ts"].to_numpy()
+        if ts.dtype.kind == "M":
+            ts = ts.view("int64")
         perm = None if _is_sorted(ts) else np.argsort(ts, kind="stable")
         work = pdf[[c for c in need if c in pdf.columns]]
         if perm is not None:
@@ -249,53 +280,73 @@ def _is_sorted(a) -> bool:
     return len(a) < 2 or bool(np.all(a[:-1] <= a[1:]))
 
 
-def assign_chunks(df: DataFrame, rows: int, carry: int,
-                  lead: int = 0) -> DataFrame:
+def assign_chunks(df: DataFrame, carry: int, *, rows: int | None = None,
+                  bucket_us: int | None = None, lead: int = 0) -> DataFrame:
     """Exact chunk-and-carry assignment (SURVEY §4.3.4), shared by the
-    kernel epoch pass and the row-chunked strategy path.
+    kernel epoch pass and both chunked strategy paths.
 
-    Chunk k of a symbol is rows [k*rows, (k+1)*rows) of its ts order,
-    ranked by ``_pts_rn0`` (``global_rn0`` unless ``df`` already carries
-    the column). Each row explodes into its own entry
-    (``_pts_chk`` = k, ``_pts_carry`` = false) plus a carry entry for
-    chunk k+1 when it is among chunk k's last ``carry`` rows and, with
-    ``lead > 0``, one for chunk k-1 when it is among the first ``lead``
-    rows of a non-first chunk. Grouping by (symbol, ``_pts_chk``) then
-    gives every chunk full warm-up (and look-ahead) context; the caller
-    drops the ``_pts_carry`` entries after computing.
+    Chunks are ranges of ``_pts_rn0``, the 0-based rank in the symbol's
+    ts order: ``rows`` per chunk (row chunks; ``global_rn0`` ranks
+    unless ``df`` already carries the column), or the rank buckets of
+    ``bucket_us`` microseconds of ts (time chunks; a chunk IS a
+    ``global_rn0`` bucket, so the rank and the chunk bounds come from
+    one offsets relation). One carry rule serves both: a row is carried
+    into every later chunk whose first row lies within ``carry`` rows
+    after it. For row chunks that is chunk k+1 for chunk k's last
+    ``carry`` rows (chunks are ``>= carry`` rows); for time chunks it
+    can span several chunks holding fewer rows than ``carry`` and skips
+    empty ones (they have no rank range), so every chunk sees the
+    ``carry`` rows before its first row at ANY chunk size. With
+    ``lead > 0`` (row chunks), the first ``lead`` rows of a non-first
+    chunk are also carried back into chunk k-1. Output: the ranked
+    frame plus ``_pts_chk`` (the chunk) and ``_pts_carry``; grouping by
+    (symbol, ``_pts_chk``) gives every chunk its full context, and the
+    caller drops the carry entries after computing.
 
     - Explode rather than union filtered copies: one subtree, so the
       rank evaluates once per action (the union form re-ran the
       per-symbol sort per branch: 9.3s -> 6.5s on a 1.6M-row hot
       symbol).
-    - Carries past a symbol's last chunk land in phantom groups that
-      hold only carry rows (<= ``carry`` of them, all dropped) — cheaper
-      than a successor map that would suppress them.
+    - Each row explodes into its own entry plus candidate carry
+      entries, each with the rank range [lo, hi) it takes; a plain
+      Filter keeps the ones whose range holds the row. No per-row
+      array lambda: Spark evaluates those without codegen.
+    - Carries past a symbol's last row chunk land in phantom groups
+      that hold only carry rows (<= ``carry`` of them, all dropped) —
+      cheaper than suppressing them.
     - ``_pts_rn0`` stays aboard: position-dependent kernels (the OLS
       family, ``KernelSpec.pos_dependent``) read it so their x positions
       stay global instead of restarting per chunk."""
     from pyspark.sql import functions as F
 
-    base = df if "_pts_rn0" in df.columns else global_rn0(df)
-    rn = F.col("_pts_rn0")
-    chk = F.floor(rn / F.lit(rows)).cast("long")
-    pos = rn % F.lit(rows)
+    def entry(chk, lo, hi):
+        return F.struct(chk.alias("_pts_chk"), lo.alias("_pts_lo"),
+                        hi.alias("_pts_hi"))
 
-    def entry(c, carried: bool):
-        return F.struct(c.alias("_pts_chk"),
-                        F.lit(carried).alias("_pts_carry"))
-
-    entries = [entry(chk, False),
-               F.when(pos >= F.lit(rows - carry), entry(chk + 1, True))]
-    if lead > 0:
-        entries.append(F.when((pos < F.lit(lead)) & (rn >= F.lit(rows)),
-                              entry(chk - 1, True)))
+    rn, e = F.col("_pts_rn0"), F.col("_pts_e")
+    if bucket_us is None:
+        base = df if "_pts_rn0" in df.columns else global_rn0(df)
+        chk = F.floor(rn / F.lit(rows)).cast("long")
+        start = chk * F.lit(rows)
+        nxt = start + F.lit(rows)
+        later = [entry(chk + 1, nxt - F.lit(carry), nxt)]
+        if lead > 0:
+            later.append(F.when(chk > 0, entry(chk - 1, start,
+                                              start + F.lit(lead))))
+        base = base.withColumns({"_pts_chk": chk, "_pts_nxt": F.array(*later)})
+    else:
+        base = _bucket_rank(df.drop("_pts_rn0"), bucket_us, carry=carry
+                            ).withColumnRenamed("_pts_bkt", "_pts_chk")
+    none = F.lit(None).cast("long")
+    entries = F.concat(F.array(entry(F.col("_pts_chk"), none, none)),
+                       F.col("_pts_nxt"))
     return (
-        base.select("*", F.explode(F.filter(
-            F.array(*entries), lambda e: e.isNotNull())).alias("_pts_e"))
-        .withColumns({c: F.col(f"_pts_e.{c}")
-                      for c in ("_pts_chk", "_pts_carry")})
-        .drop("_pts_e")
+        base.select("*", F.posexplode(entries).alias("_pts_p", "_pts_e"))
+        .filter((F.col("_pts_p") == 0)
+                | ((rn >= e["_pts_lo"]) & (rn < e["_pts_hi"])))
+        .withColumns({"_pts_chk": e["_pts_chk"],
+                      "_pts_carry": F.col("_pts_p") > 0})
+        .drop("_pts_nxt", "_pts_p", "_pts_e")
     )
 
 
@@ -311,7 +362,7 @@ def _run_chunked(
     ``_pts_rn0`` kept, a computed one dropped), then the outputs."""
     from pyspark.sql import functions as F
 
-    u = assign_chunks(df, chunk, carry, lead)
+    u = assign_chunks(df, carry, rows=chunk, lead=lead)
     out = u.groupBy("symbol", "_pts_chk").applyInPandas(
         _make_runner(specs), _out_schema(u, specs))
     temps = [c for c in ("_pts_rn0", "_pts_chk", "_pts_carry")

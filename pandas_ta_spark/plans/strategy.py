@@ -366,103 +366,35 @@ def apply_strategy_chunked(
     inds: list[Indicator],
     lookback: int,
     chunk: str = "30 days",
-    validate: bool = False,
 ) -> DataFrame:
-    """``apply_strategy`` for per-symbol series too long for one window
-    partition — the expression-path twin of ``plans/kernels.py``'s
-    epoch-chunked execution (which covers the Arrow kernel pass only).
+    """``apply_strategy`` over time chunks (``chunk``: "N days" or "N
+    hours") for per-symbol series too long for one window partition.
 
     WindowExec buffers an entire (symbol) partition; a multi-year tick
-    series for one instrument can exceed executor memory. This splits
-    each symbol into time chunks, REPLICATES the trailing ``lookback``
-    rows of every chunk into its successor (the carry), computes the
-    strategy per (symbol, chunk) sub-series — bounded buffering — and
-    drops the carry copies. Results are EXACTLY the unchunked ones
-    because every retained row sees >= lookback rows of true history in
-    its frame, provided:
-
-    - every indicator is bounded-lookback: ROLL/WROLL/lag window ops
-      with max window/shift <= lookback, or kernels whose declared
-      ``carry_rows`` fits inside ``lookback`` (their carry replicas ARE
-      exactly the history the kernel needs). BOTH halves of the
-      contract are now ENFORCED (ADVICE r6): EWM/unbounded/too-deep
-      kernels are rejected via ``carry_rows``/``lead_rows``, and
-      expression indicators are depth-checked via
-      ``expression_lookback`` (SQL-twin introspection) — deeper-than-
-      lookback windows, cumulative/position-dependent expressions
-      (CUM, row_number, lead) all raise instead of silently diverging
-      (CUM ops are O(1)-state anyway: run them unchunked);
-    - every NON-EMPTY chunk holds >= lookback rows per symbol (set
-      ``validate=True`` to enforce with one cheap extra aggregation —
-      default off to keep the plan count-free). Carries jump to the next
-      non-empty chunk, so empty chunks (trading halts, holidays) are
-      exact for free; only an undersized non-empty chunk can truncate a
-      frame the unchunked plan would fill.
-
-    Plan shape: ONE extra bounded window pass (row_number per
-    (symbol, chunk), buffer = chunk size) to pick the carry rows, a
-    broadcast join against the tiny (symbol, chunk) successor map, one
-    union, then the normal strategy over the salted symbol — the same
-    shuffles as ``apply_strategy``, each partition now chunk-sized.
-    """
+    series for one instrument can exceed executor memory. This is
+    ``assign_chunks`` over time buckets — every chunk gets the
+    ``lookback`` rows before its first row as carry, whatever the
+    chunk and gap sizes — then ``_salt_apply_unsalt``. Every indicator
+    must be bounded-lookback (``chunk_depth <= lookback``; anything
+    else raises, see ``_reject_unchunkable``)."""
     _reject_unchunkable(inds, lookback)
-    if any(i.kernel is not None and i.kernel.pos_dependent for i in inds):
-        # position-dependent kernels (OLS family) need the global rank
-        # to keep chunked x bit-identical to the whole-group x; only
-        # pay the rank subtree when such a kernel is present
-        from pandas_ta_spark.plans.kernels import global_rn0
-
-        df = global_rn0(df, out="_pts_rn0")
-    # .cast: parquet TIMESTAMP_NTZ inputs — unix_micros wants TIMESTAMP
-    us = F.unix_micros(F.col(TS).cast("timestamp"))
     # parse "N days"/"N hours" without relying on engine interval math
     qty, unit = chunk.split()
     per = {"day": 86_400_000_000, "days": 86_400_000_000,
            "hour": 3_600_000_000, "hours": 3_600_000_000}[unit]
-    chunk_us = int(qty) * per
-    base = df.withColumn("_pts_chk",
-                         F.floor(us / F.lit(chunk_us)).cast("long"))
-    # successor map: carries target the next chunk that actually has
-    # rows, so a symbol dark for whole chunks still hands its history
-    # across the gap (chunk c+1 empty -> c's tail lands in c+2). Tiny
-    # relation (symbols x chunks), broadcast.
-    wnext = Window.partitionBy(SYMBOL).orderBy("_pts_chk")
-    succ = (
-        base.select(SYMBOL, "_pts_chk").distinct()
-        .withColumn("_next", F.lead("_pts_chk").over(wnext))
-        .filter(F.col("_next").isNotNull())
-    )
-    if validate:
-        counts = (
-            base.groupBy(SYMBOL, "_pts_chk").count()
-            .withColumn("_last", F.lead("_pts_chk").over(wnext).isNull())
-            .filter(~F.col("_last") & (F.col("count") < lookback))
-        )
-        offenders = counts.limit(5).collect()
-        if offenders:
-            bad = [(r[SYMBOL], r["_pts_chk"], r["count"]) for r in offenders]
-            raise ValueError(
-                f"chunk(s) with < lookback={lookback} rows would truncate "
-                f"frames vs the unchunked plan: {bad}"
-            )
-    wdesc = Window.partitionBy(SYMBOL, "_pts_chk").orderBy(F.col(TS).desc())
-    carry = (
-        base.withColumn("_rnd", F.row_number().over(wdesc))
-        .filter(F.col("_rnd") <= lookback)
-        .drop("_rnd")
-        .join(F.broadcast(succ), [SYMBOL, "_pts_chk"])
-        .withColumn("_pts_chk", F.col("_next"))
-        .drop("_next")
-        .withColumn("_pts_carry", F.lit(True))
-    )
-    u = base.withColumn("_pts_carry", F.lit(False)).unionByName(carry)
-    return _salt_apply_unsalt(u, inds)
+    return _salt_apply_unsalt(
+        assign_chunks(df, lookback, bucket_us=int(qty) * per), inds)
 
 
 def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
-    """Shared tail of the chunked paths: salt symbol with the chunk id,
-    run the normal one-plan strategy over the salted key (auto-routing
-    off — the groups are chunk-bounded by construction), drop carries."""
+    """Shared tail of the chunked paths, over ``assign_chunks`` output:
+    salt symbol with the chunk id, run the normal one-plan strategy over
+    the salted key (auto-routing off — the groups are chunk-bounded by
+    construction), drop the carries and the chunk columns. Every chunk
+    holds its carry of the rows just before it, so with each
+    indicator's ``chunk_depth`` within that carry the output is
+    bit-identical to ``apply_strategy``; exactness assumes (symbol, ts)
+    uniquely orders rows, like every per-symbol window here."""
     salted = u.withColumn("_sym", F.col(SYMBOL)).withColumn(
         SYMBOL, F.concat_ws("#", SYMBOL, F.col("_pts_chk").cast("string"))
     )
@@ -476,8 +408,8 @@ def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
         .withColumn(SYMBOL, F.col("_sym"))
         .drop("_sym", "_pts_chk", "_pts_carry")
     )
-    # the global rank (kept for position-dependent kernels) is plumbing,
-    # not output
+    # the rank (kept for position-dependent kernels) is plumbing, not
+    # output
     return out.drop("_pts_rn0")
 
 
@@ -531,16 +463,13 @@ def apply_strategy_chunked_rows(
 ) -> DataFrame:
     """``apply_strategy_chunked`` with ROW-count chunks instead of time
     chunks — the auto-routing backend (see ``apply_strategy``):
-    ``assign_chunks(df, chunk_rows, lookback)`` then the salted
-    strategy. Every non-last chunk holds exactly ``chunk_rows >=
-    lookback`` rows, so the carry always fills its successor's frames
-    — bit-identical to the unchunked plan with no validation count.
-    ``_pts_rn0`` is reused when ``df`` carries it and dropped from the
-    output either way. Like every per-symbol window in this engine,
-    exactness assumes (symbol, ts) uniquely orders rows."""
+    ``assign_chunks`` over ``chunk_rows``-row chunks, then
+    ``_salt_apply_unsalt``. ``_pts_rn0`` is reused when ``df`` carries
+    it and dropped from the output either way."""
     if chunk_rows < max(lookback, 1):
         raise ValueError(
             f"chunk_rows={chunk_rows} < lookback={lookback}: non-last "
             "chunks could not carry enough history")
     _reject_unchunkable(inds, lookback)
-    return _salt_apply_unsalt(assign_chunks(df, chunk_rows, lookback), inds)
+    return _salt_apply_unsalt(
+        assign_chunks(df, lookback, rows=chunk_rows), inds)

@@ -1485,6 +1485,7 @@ def test_chunked_strategy_exact_parity(spark, bars):
     from pandas_ta_spark.operators import (
         momentum, overlap, statistics, trend, volatility)
     from pandas_ta_spark.plans.strategy import apply_strategy, apply_strategy_chunked
+    from pyspark.sql import functions as F
 
     # aroon: carry_rows=14 KERNEL whose SQL twin renders a positional
     # argmax (row_number) — oracle-only shape must not veto chunking
@@ -1492,22 +1493,24 @@ def test_chunked_strategy_exact_parity(spark, bars):
     inds = [overlap.sma(20), overlap.wma(10), statistics.stdev(30),
             volatility.donchian(20), momentum.roc(10), momentum.mom(10),
             trend.aroon(14)]
-    plain = (apply_strategy(bars, inds).toPandas()
+    # NULL keys keep their rows and values as on the plain path: one
+    # NULL-ts row per symbol (NULLs sort first in the windows and in the
+    # kernel runner) and one NULL-symbol row
+    at = bars.filter(F.col("ts") == F.lit(pd.Timestamp("2024-01-05 07:00")))
+    keyed = (bars.unionByName(at.withColumn("ts", F.lit(None).cast("timestamp")))
+             .unionByName(at.filter(F.col("symbol") == "A")
+                          .withColumn("symbol", F.lit(None).cast("string"))))
+    plain = (apply_strategy(keyed, inds).toPandas()
              .sort_values(["symbol", "ts"]).reset_index(drop=True))
-    chunked = (apply_strategy_chunked(bars, inds, lookback=30, chunk="3 days")
+    chunked = (apply_strategy_chunked(keyed, inds, lookback=30, chunk="3 days")
                .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
     assert list(plain.columns) == list(chunked.columns)
-    assert len(plain) == len(chunked)
+    assert len(plain) == len(chunked) == bars.count() + 3
     for c in plain.columns:
-        if plain[c].dtype == object or c in ("symbol", "ts"):
-            assert (plain[c] == chunked[c]).all(), c
-        else:
-            a, b = plain[c], chunked[c]
-            assert ((a == b) | (a.isna() & b.isna())).all(), c
+        a, b = plain[c], chunked[c]
+        assert ((a == b) | (a.isna() & b.isna())).all(), c
     # guard against vacuous parity: the fixture must actually span
     # multiple chunks (computed from the data, not assumed)
-    from pyspark.sql import functions as F
-
     n_chunks = (bars.select(
         "symbol",
         F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1527,9 +1530,9 @@ def test_chunked_strategy_survives_empty_chunks(spark, bars):
     # knock out one FULL epoch-aligned 3-day chunk: boundaries fall on
     # epoch days divisible by 3 (2023-12-31, 2024-01-03, 2024-01-06, ...),
     # so removing [01-03, 01-06) leaves the surrounding chunks intact and
-    # the removed chunk exactly empty. (A non-aligned gap instead creates
-    # an UNDERSIZED chunk — the documented-inexact case validate=True
-    # catches.)
+    # the removed chunk exactly empty. (A non-aligned gap instead leaves
+    # an UNDERSIZED chunk, which the carry spans too: the property test
+    # draws those.)
     gap_lo = pd.Timestamp("2024-01-03")
     gap_hi = pd.Timestamp("2024-01-06")
     holed = bars.filter(~((F.col("ts") >= F.lit(gap_lo)) & (F.col("ts") < F.lit(gap_hi))))
@@ -1640,18 +1643,6 @@ def test_expression_lookback_catches_framefree_and_rank_family():
     from pandas_ta_spark.registry import default_instance
 
     assert default_instance("eom_14").kernel.carry_rows == 14
-
-
-def test_chunked_strategy_validate_flags_undersized_chunk(bars):
-    import pytest as _pytest
-
-    from pandas_ta_spark.operators import overlap
-    from pandas_ta_spark.plans.strategy import apply_strategy_chunked
-
-    # 3-day chunks hold 72 hourly rows; lookback=100 > 72 must be caught
-    with _pytest.raises(ValueError, match="truncate"):
-        apply_strategy_chunked(bars, [overlap.sma(20)], lookback=100,
-                               chunk="3 days", validate=True).collect()
 
 
 def test_asof_join_property_vs_merge_asof(spark):
@@ -1939,7 +1930,8 @@ def test_chunked_strategy_property_parity(spark):
     """Property-based twin of the fixed-config chunked parity tests:
     random chunk sizes, lookbacks and indicator subsets must reproduce
     the unchunked plan bit-for-bit whenever the contract holds (depth <=
-    lookback, every non-final chunk >= lookback rows)."""
+    lookback) — at any chunk size, including chunks with fewer rows than
+    the indicators read."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -1958,8 +1950,7 @@ def test_chunked_strategy_property_parity(spark):
         rng = np.random.default_rng(data.draw(st.integers(0, 10_000)))
         idx = sorted(rng.choice(len(pool), size=3, replace=False))
         inds = [pool[i]() for i in idx]
-        chunk_days = int(rng.integers(2, 6))
-        lookback = int(rng.integers(30, min(40, chunk_days * 24)))
+        lookback = int(rng.integers(30, 40))
         from tests.conftest import make_pdf
 
         pdf = pd.concat([make_pdf(260, int(rng.integers(0, 100)), "A"),
@@ -1968,17 +1959,20 @@ def test_chunked_strategy_property_parity(spark):
         bars = spark.createDataFrame(pdf).repartition(4)
         plain = (apply_strategy(bars, inds).toPandas()
                  .sort_values(["symbol", "ts"]).reset_index(drop=True))
-        chunked = (apply_strategy_chunked(bars, inds, lookback=lookback,
-                                          chunk=f"{chunk_days} days")
-                   .toPandas().sort_values(["symbol", "ts"])
-                   .reset_index(drop=True))
-        assert len(plain) == len(chunked)
-        for c in plain.columns:
-            a, b = plain[c], chunked[c]
-            if a.dtype == object or c in ("symbol", "ts"):
-                assert (a == b).all(), c
-            else:
-                assert ((a == b) | (a.isna() & b.isna())).all(), c
+        # hourly rows: one width under most pool depths (12-19 rows per
+        # chunk) and one drawn from 12 hours to 5 days
+        for hours in (int(rng.integers(12, 20)), int(rng.integers(12, 121))):
+            chunked = (apply_strategy_chunked(bars, inds, lookback=lookback,
+                                              chunk=f"{hours} hours")
+                       .toPandas().sort_values(["symbol", "ts"])
+                       .reset_index(drop=True))
+            assert len(plain) == len(chunked)
+            for c in plain.columns:
+                a, b = plain[c], chunked[c]
+                if a.dtype == object or c in ("symbol", "ts"):
+                    assert (a == b).all(), (hours, c)
+                else:
+                    assert ((a == b) | (a.isna() & b.isna())).all(), (hours, c)
 
     check()
 

@@ -81,8 +81,9 @@ def render() -> str:
          "public as-of join over arbitrary event/bar relations",
          "tests/test_api_and_ext.py::test_asof_join_property_vs_merge_asof"),
         ("pandas_ta_spark.plans.strategy", "apply_strategy_chunked",
-         "bounded-memory chunked strategy (exact carry, depth-checked)",
-         "tests/test_api_and_ext.py (4 chunked tests)"),
+         "bounded-memory time-chunked strategy (exact carry at any chunk"
+         " size, depth-checked)",
+         "tests/test_api_and_ext.py (5 test_chunked_strategy_* tests)"),
         ("pandas_ta_spark.plans.strategy", "expression_lookback",
          "SQL-twin depth introspection for the chunk contract",
          "tests/test_api_and_ext.py::"

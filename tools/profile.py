@@ -37,7 +37,7 @@ class Variant(NamedTuple):
 
 
 def shape_24(spark, sf_dir, tmp):
-    from bench import QUERY_CONF, cached_ticks, strategy_indicators
+    from bench import cached_ticks, strategy_indicators
     from pandas_ta_spark.plans.kernels import run_kernels
     from pandas_ta_spark.plans.strategy import apply_strategy
 
@@ -45,24 +45,23 @@ def shape_24(spark, sf_dir, tmp):
     strat24 = strategy_indicators()
     windows = [i for i in strat24 if i.kernel is None]
     kernels = [i.kernel for i in strat24 if i.kernel is not None]
-    conf = QUERY_CONF["tick_strategy_24ind"]
     out = {
-        "noop_scan": Variant(lambda: ticks, conf),
-        "window_only": Variant(lambda: apply_strategy(ticks, windows), conf),
-        "kernel_only": Variant(lambda: run_kernels(ticks, kernels), conf),
+        "noop_scan": Variant(lambda: ticks),
+        "window_only": Variant(lambda: apply_strategy(ticks, windows)),
+        "kernel_only": Variant(lambda: run_kernels(ticks, kernels)),
         # the kernel pass over the window stage's wide output, as in full
         "kernel_after_windows": Variant(lambda: run_kernels(
-            apply_strategy(ticks, windows), kernels), conf),
-        "full": Variant(lambda: apply_strategy(ticks, strat24), conf),
+            apply_strategy(ticks, windows), kernels)),
+        "full": Variant(lambda: apply_strategy(ticks, strat24)),
     }
     for batch in ("10000", "65536", "262144"):
         out[f"full_arrowbatch_{batch}"] = Variant(out["full"].build, {
-            **conf, "spark.sql.execution.arrow.maxRecordsPerBatch": batch})
+            "spark.sql.execution.arrow.maxRecordsPerBatch": batch})
     return out
 
 
 def shape_145(spark, sf_dir, tmp):
-    from bench import QUERY_CONF, all_indicators, cached_ticks
+    from bench import all_indicators, cached_ticks
     from pandas_ta_spark.plans.strategy import apply_strategy
 
     ticks = cached_ticks(spark, sf_dir)
@@ -76,11 +75,10 @@ def shape_145(spark, sf_dir, tmp):
         "expr_only": expr,
         "expr_noncandle": [i for i in expr if i.category != "candles"],
     }
-    conf = QUERY_CONF["tick_strategy_all145ind"]
-    out = {name: Variant(lambda w=w: apply_strategy(ticks, w), conf)
+    out = {name: Variant(lambda w=w: apply_strategy(ticks, w))
            for name, w in sets.items()}
     out["full_nocodegen"] = Variant(out["full"].build, {
-        **conf, "spark.sql.codegen.wholeStage": "false"})
+        "spark.sql.codegen.wholeStage": "false"})
     return out
 
 
